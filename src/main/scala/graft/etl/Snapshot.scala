@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Crash-atomic snapshot commit over plain parquet — the reference wraps
   * every chunk write in a transaction (`pyopenetl/operations.py:181`
@@ -15,10 +16,17 @@ import org.apache.spark.sql.functions._
   * Layout: `root/_v<N>/` holds complete parquet base snapshots;
   * `root/_v<N>_d<M>/` holds incremental delta snapshots on top of base
   * `<N>` (see [[commitDelta]]); `root/_current` is a one-line pointer file
-  * naming the committed (base, delta-count) pair. Base commit order:
+  * naming the committed (base, delta-count) pair. Every base and delta
+  * directory also carries `_schema.json`, the schema Spark inferred from
+  * the directory right after writing it; reads pass that schema to the
+  * parquet reader, so resolving a snapshot launches no schema-inference
+  * job (one per directory otherwise, base and every stacked delta).
+  * Directories committed before the file existed have none and are read
+  * with inference. Base commit order:
   *
-  *   1. write the new snapshot into a fresh `_v<N+1>` directory — readers
-  *      never look at it because the pointer still names `<N>`;
+  *   1. write the new snapshot into a fresh `_v<N+1>` directory and record
+  *      its `_schema.json` — readers never look at it because the pointer
+  *      still names `<N>`;
   *   2. write the pointer to a temp file and atomically rename it over
   *      `_current` ([[FileContext.rename]] with OVERWRITE — atomic on
   *      HDFS and POSIX; on S3-likes the pointer is one small object so
@@ -172,10 +180,10 @@ object Snapshot {
       val in = fs.open(marker.getPath)
       val p = try parsePointer(new String(in.readAllBytes(), UTF_8))
         finally in.close()
-      val base = spark.read.parquet(dir.toString)
+      val base = readDir(spark, dir)
       if (p.nDeltas == 0L) base
       else mergedView(base, (1L to p.nDeltas).map(d =>
-        spark.read.parquet(deltaDir(root, version, d).toString)), p.pk)
+        readDir(spark, deltaDir(root, version, d))), p.pk)
     }
   }
 
@@ -218,12 +226,41 @@ object Snapshot {
         val dir = versionDir(root, p.base)
         require(dir.getFileSystem(conf(spark)).exists(dir),
           s"snapshot pointer names _v${p.base} but the directory is missing: $root")
-        val base = spark.read.parquet(dir.toString)
+        val base = readDir(spark, dir)
         if (p.nDeltas == 0L) base
         else mergedView(base, (1L to p.nDeltas).map(d =>
-          spark.read.parquet(deltaDir(root, p.base, d).toString)), p.pk)
+          readDir(spark, deltaDir(root, p.base, d))), p.pk)
       case None => spark.read.parquet(root)
     }
+
+  private val SchemaFile = "_schema.json"
+
+  /** Infer the schema of a directory this writer just filled (one Spark
+    * job over a parquet footer) and record it as `_schema.json` inside
+    * the directory. Called before the pointer swap: a crash leaves the
+    * file in a directory no pointer names, and a retried delta commit
+    * overwrites it with the directory. The `_` prefix keeps it out of
+    * Spark's file index. */
+  private def recordSchema(spark: SparkSession, dir: Path): Unit = {
+    val schema = spark.read.parquet(dir.toString).schema
+    val out = dir.getFileSystem(conf(spark))
+      .create(new Path(dir, SchemaFile), true)
+    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Read one committed base or delta directory with its recorded schema
+    * (no inference job); a directory committed before schemas were
+    * recorded has no `_schema.json` and falls back to inference. */
+  private def readDir(spark: SparkSession, dir: Path): DataFrame = {
+    val file = new Path(dir, SchemaFile)
+    val reader =
+      try {
+        val in = file.getFileSystem(conf(spark)).open(file)
+        val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
+        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
+      } catch { case _: java.io.FileNotFoundException => spark.read }
+    reader.parquet(dir.toString)
+  }
 
   /** base ⊎ deltas with latest-wins-per-pk semantics: one union + one
     * window on pk — O(base + Σdeltas) with a single shuffle, not the
@@ -276,6 +313,7 @@ object Snapshot {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(versionDir(root, next).toString)
+    recordSchema(spark, versionDir(root, next))
     beforeSwap()
     swapPointer(spark, root,
       Pointer(next, 0L, pk, partitionCols, newToken()), prevLine)
@@ -315,7 +353,7 @@ object Snapshot {
       fs.listStatus(new Path(root))
         .filter(st => !st.getPath.getName.startsWith("_"))
         .foreach(st => fs.delete(st.getPath, true))
-    spark.read.parquet(versionDir(root, next).toString)
+    readDir(spark, versionDir(root, next))
   }
 
   /** Commit `delta` incrementally: O(batch) write of a `_v<N>_d<M+1>`
@@ -333,13 +371,18 @@ object Snapshot {
     * (verified — a key change mid-stack would silently corrupt the
     * merge). A root with no base yet takes the delta as base version 1.
     *
+    * Returns nothing: read the committed table with [[read]]. Beyond its
+    * write jobs a commit launches one schema-inference job, for the
+    * `_schema.json` of the directory it wrote (plus the compaction's own
+    * write and inference when the stack folds).
+    *
     * Crash-safety is the base protocol's: a crash before the swap leaves
     * a torn `_d<M+1>` directory the pointer never names — invisible to
-    * readers, and overwritten whole by the retried commit (the next
-    * index is always pointer-count + 1); base commits GC the whole
-    * stack of dead versions.
+    * readers, and overwritten whole, schema file included, by the retried
+    * commit (the next index is always pointer-count + 1); base commits GC
+    * the whole stack of dead versions.
     */
-  def commitDelta(delta: DataFrame, root: String, pk: String): DataFrame = {
+  def commitDelta(delta: DataFrame, root: String, pk: String): Unit = {
     val spark = delta.sparkSession
     val prevLine = readPointerLine(spark, root)
     prevLine.map(parsePointer) match {
@@ -367,6 +410,7 @@ object Snapshot {
         val nextD = p.nDeltas + 1
         delta.write.mode("overwrite")
           .parquet(deltaDir(root, p.base, nextD).toString)
+        recordSchema(spark, deltaDir(root, p.base, nextD))
         swapPointer(spark, root,
           Pointer(p.base, nextD, pk, p.partCols, newToken()), prevLine)
         // compaction preserves the base's hive-partition layout (recorded
@@ -374,7 +418,6 @@ object Snapshot {
         // destination's directory pruning
         if (nextD >= CompactThreshold)
           commitHooked(read(spark, root), root, p.partCols, () => (), pk)
-        else read(spark, root)
     }
   }
 

@@ -362,7 +362,9 @@ object GraphQueries extends QueryModule {
         // by the literal is the identical IEEE operation, without the
         // per-half-step broadcast-exchange machinery.
         val r = raw.transform(graft.Checkpoints.ckpt)
-        val tot = r.agg(Fns.dsum18(col("raw")).as("tot")).head().getDouble(0)
+        val t = r.agg(Fns.dsum18(col("raw")).as("tot")).head()
+        // no edges → no rows and a null total; any divisor keeps r empty
+        val tot = if (t.isNullAt(0)) 1.0 else t.getDouble(0)
         r.select(col("node"), (col("raw") / lit(tot)).as("score"))
       }
       def hubStep(auth: DataFrame): DataFrame = normalized(

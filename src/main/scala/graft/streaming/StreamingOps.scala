@@ -484,10 +484,11 @@ object StreamingOps {
           .filter(col("__rn") === 1).drop("__rn")
         // crash-atomic INCREMENTAL commit (graft.etl.Snapshot.commitDelta):
         // the micro-batch writes only its own deduped rows as a _d<M>
-        // delta and swings the pointer atomically — O(batch) per trigger,
-        // not O(table); Snapshot.read folds the stack latest-wins on pk
-        // (exactly UpsertKernel.merge semantics) and the stack compacts
-        // into a new base every CompactThreshold batches. A crash
+        // delta, records its schema (one footer read) and swings the
+        // pointer atomically — O(batch) per trigger, not O(table), and
+        // nothing is read back; Snapshot.read folds the stack latest-wins
+        // on pk (exactly UpsertKernel.merge semantics) and the stack
+        // compacts into a new base every CompactThreshold batches. A crash
         // mid-batch leaves readers on the old complete pointer state, and
         // the replayed batch recommits the same content. Row-level file
         // rewrites (beyond snapshot+delta) remain the Delta/Iceberg seam

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that the row-level oracle would never notice.
   */
 class PlanGuardSpec extends AnyFunSuite {
+  import PlanGuardSpec.isScanFanout
   lazy val spark = TestSpark.spark
 
   /** The deliberate broadcast cross joins: a tiny broadcast side crossed
@@ -63,8 +64,6 @@ class PlanGuardSpec extends AnyFunSuite {
       "q227_interval_join", // 1-row hour-count/total × the hourly rollup
       "q235_autocorrelation", // 7-row lag spine × the day-domain rollup
       "q238_embedding_drift", // #sources-row mean vectors × themselves
-      "q246_hits", // 1-row L1-total × the nodes-sized rank state, ×4
-                   // normalizations (one per HITS half-step)
       "q249_rrf_fusion", // q38's shape: 5-row broadcast query set × corpus
       "q251_ewma", // 1-row global max-day × the daily rollup
       "q254_cms_heavy_hitters", // 1-row corpus total × the ≤20 hitter rows
@@ -346,65 +345,6 @@ class PlanGuardSpec extends AnyFunSuite {
     * artifact of the moment, not a plan regression, so both flavors of
     * duplicate collapse to one. A real regression (a NEW shuffle
     * boundary) has a distinct canonical subtree and still counts. */
-  /** The r14 scan-fanout exchange (Tables.t): a round-robin repartition
-    * sitting DIRECTLY on a file scan (projections/filters only below),
-    * added because the single-row-group fixture parquet caps every scan
-    * stage at one task. It exists only at fixture scale (the branch is
-    * size-gated and never fires on splittable production inputs), so the
-    * ceilings — which audit the ALGORITHM's shuffle count — exclude it;
-    * any OTHER round-robin exchange (one above a join/aggregate) still
-    * counts. */
-  private def isScanFanout(
-      p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
-    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-    // STRICT node whitelist (r15, ADVICE): only the nodes Tables.t's
-    // loader can legally put under its fanout — scan, projection,
-    // filter, and the codegen/columnar plumbing around them. A
-    // reintroduced hard-coded repartition(N) above a join or aggregate
-    // (the covUpper-style local constant r14 removed) must NOT slip
-    // through this exemption, so any other node type fails the match
-    // and that exchange counts against the ceiling like any shuffle.
-    def scanOnly(c: SparkPlan): Boolean = c match {
-      case _: ShuffleExchangeLike => false
-      case _: ReusedExchangeExec => false
-      case q: QueryStageExec => scanOnly(q.plan)
-      case leaf if leaf.children.isEmpty => leaf.nodeName.contains("Scan")
-      case p: org.apache.spark.sql.execution.ProjectExec => scanOnly(p.child)
-      case f: org.apache.spark.sql.execution.FilterExec => scanOnly(f.child)
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-        scanOnly(w.child)
-      case i: org.apache.spark.sql.execution.InputAdapter => scanOnly(i.child)
-      case c2r: org.apache.spark.sql.execution.ColumnarToRowExec =>
-        scanOnly(c2r.child)
-      case _ => false
-    }
-    // The loader's fanout partitioning: r14's round-robin, or r15's
-    // deterministic content hash — ONE xxhash64 over the scan's own
-    // columns (any other hash partitioning, e.g. a join/agg key, is a
-    // real algorithm shuffle and still counts).
-    def isFanoutPartitioning(
-        pt: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
-        : Boolean = pt match {
-      case _: RoundRobinPartitioning => true
-      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-        h.expressions match {
-          case Seq(_: org.apache.spark.sql.catalyst.expressions.XxHash64) =>
-            true
-          case _ => false
-        }
-      case _ => false
-    }
-    p match {
-      case s: ShuffleExchangeLike =>
-        isFanoutPartitioning(s.outputPartitioning) &&
-          s.children.forall(scanOnly)
-      case _ => false
-    }
-  }
-
   private def countShuffles(
       plan: org.apache.spark.sql.execution.SparkPlan): Int = {
     import org.apache.spark.sql.execution.SparkPlan
@@ -576,5 +516,67 @@ class PlanGuardSpec extends AnyFunSuite {
     val n = countShuffles(executed("q248_bucketed_join"))
     assert(n <= 2,
       s"q248's join shuffled a side ($n exchanges, expected ≤2):\n$p")
+  }
+}
+
+object PlanGuardSpec {
+  /** The loader's scan-fanout exchange (Tables.t): a round-robin (r14) or
+    * single-xxhash64 (r15) repartition sitting DIRECTLY on a file scan
+    * (projections/filters only below),
+    * added because the single-row-group fixture parquet caps every scan
+    * stage at one task. It exists only at fixture scale (the branch is
+    * size-gated and never fires on splittable production inputs), so the
+    * ceilings — which audit the ALGORITHM's shuffle count — exclude it;
+    * any OTHER round-robin exchange (one above a join/aggregate) still
+    * counts. */
+  private[graft] def isScanFanout(
+      p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    // STRICT node whitelist (r15, ADVICE): only the nodes Tables.t's
+    // loader can legally put under its fanout — scan, projection,
+    // filter, and the codegen/columnar plumbing around them. A
+    // reintroduced hard-coded repartition(N) above a join or aggregate
+    // (the covUpper-style local constant r14 removed) must NOT slip
+    // through this exemption, so any other node type fails the match
+    // and that exchange counts against the ceiling like any shuffle.
+    def scanOnly(c: SparkPlan): Boolean = c match {
+      case _: ShuffleExchangeLike => false
+      case _: ReusedExchangeExec => false
+      case q: QueryStageExec => scanOnly(q.plan)
+      case leaf if leaf.children.isEmpty => leaf.nodeName.contains("Scan")
+      case p: org.apache.spark.sql.execution.ProjectExec => scanOnly(p.child)
+      case f: org.apache.spark.sql.execution.FilterExec => scanOnly(f.child)
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+        scanOnly(w.child)
+      case i: org.apache.spark.sql.execution.InputAdapter => scanOnly(i.child)
+      case c2r: org.apache.spark.sql.execution.ColumnarToRowExec =>
+        scanOnly(c2r.child)
+      case _ => false
+    }
+    // The loader's fanout partitioning: r14's round-robin, or r15's
+    // deterministic content hash — ONE xxhash64 over the scan's own
+    // columns (any other hash partitioning, e.g. a join/agg key, is a
+    // real algorithm shuffle and still counts).
+    def isFanoutPartitioning(
+        pt: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
+        : Boolean = pt match {
+      case _: RoundRobinPartitioning => true
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions match {
+          case Seq(_: org.apache.spark.sql.catalyst.expressions.XxHash64) =>
+            true
+          case _ => false
+        }
+      case _ => false
+    }
+    p match {
+      case s: ShuffleExchangeLike =>
+        isFanoutPartitioning(s.outputPartitioning) &&
+          s.children.forall(scanOnly)
+      case _ => false
+    }
   }
 }

@@ -4,6 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.TestSpark
 import org.apache.hadoop.fs.Path
+import org.apache.spark.TestListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash-atomicity of the versioned snapshot commit: a writer killed
@@ -21,6 +25,39 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   private def freshRoot() = s"/tmp/graft-test-snap-${System.nanoTime()}"
+
+  private def fs = new Path("/tmp").getFileSystem(
+    spark.sparkContext.hadoopConfiguration)
+
+  /** The schema a commit recorded for one directory. */
+  private def recorded(dir: String): StructType = {
+    val in = fs.open(new Path(dir, "_schema.json"))
+    try DataType.fromJson(new String(in.readAllBytes(), UTF_8))
+      .asInstanceOf[StructType]
+    finally in.close()
+  }
+
+  /** What schema inference says about the same directory. */
+  private def inferred(dir: String): StructType =
+    spark.read.parquet(dir).schema
+
+  /** Spark jobs started while `body` runs, counted after the listener bus
+    * has delivered every event (before and after, so no earlier job
+    * leaks in and no job of `body` is missed). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    TestListenerBridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try { body; TestListenerBridge.drainListeners(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
 
   test("commit round-trips and bumps the version") {
     val root = freshRoot()
@@ -322,5 +359,104 @@ class SnapshotSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root, "_v1"), true)
     intercept[IllegalArgumentException] { Snapshot.read(spark, root) }
+  }
+
+  test("each committed directory records the schema inference gives") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(3), root)
+    assert(recorded(s"$root/_v1") == inferred(s"$root/_v1"))
+    // deltas that add a column, then drop one
+    Snapshot.commitDelta(
+      Seq((4L, "d", 7L)).toDF("id", "payload", "extra"), root, "id")
+    Snapshot.commitDelta(Seq(5L).toDF("id"), root, "id")
+    Seq("_v1_d1", "_v1_d2").foreach { d =>
+      assert(recorded(s"$root/$d") == inferred(s"$root/$d"), d)
+    }
+    assert(recorded(s"$root/_v1_d1").fieldNames.contains("extra"))
+    assert(recorded(s"$root/_v1_d2").fieldNames.toSeq == Seq("id"))
+    // the spark-written schema file is no data file: reads see the rows
+    assert(Snapshot.read(spark, root).count() == 5)
+  }
+
+  test("a hive-partitioned commit records the inferred partition types") {
+    import spark.implicits._
+    val root = freshRoot()
+    // a string partition column with numeric-looking values: inference
+    // types it int, and the recorded schema must say the same so reads
+    // through it match reads that infer
+    val data = Seq((1L, "10", "a"), (2L, "20", "b"), (3L, "10", "c"))
+      .toDF("id", "bucket", "payload")
+    Snapshot.commit(data, root, partitionCols = Seq("bucket"))
+    val dir = s"$root/_v1"
+    assert(inferred(dir)("bucket").dataType == IntegerType)
+    assert(recorded(dir) == inferred(dir))
+    val got = Snapshot.read(spark, root)
+    assert(got.schema == inferred(dir))
+    assert(got.collect().toSet == spark.read.parquet(dir).collect().toSet)
+  }
+
+  test("directories without a schema file read by inference, same rows") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(4), root)
+    Snapshot.commitDelta(Seq((2L, "b2")).toDF("id", "payload"), root, "id")
+    Snapshot.commitDelta(
+      Seq((9L, "n", 1L)).toDF("id", "payload", "extra"), root, "id")
+    def rows() = Snapshot.read(spark, root).orderBy("id").collect().toSeq
+    val before = rows()
+    // a root committed before schema files existed
+    val files = fs.globStatus(new Path(root, "_v*/_schema.json"))
+    assert(files.length == 3)
+    files.foreach(st => fs.delete(st.getPath, false))
+    assert(rows() == before)
+    assert(Snapshot.read(spark, root).schema ==
+      StructType(Seq(StructField("id", LongType),
+        StructField("payload", StringType), StructField("extra", LongType))))
+  }
+
+  test("a retried delta commit replaces a torn directory's schema file") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(3), root)
+    // crash state: _v1_d1 holds torn data and a stale schema file, and
+    // the pointer still names 0 deltas
+    val torn = fs.create(new Path(root, "_v1_d1/part-00000.parquet"), true)
+    torn.write("torn bytes, not parquet".getBytes(UTF_8)); torn.close()
+    val stale = fs.create(new Path(root, "_v1_d1/_schema.json"), true)
+    stale.write(StructType(Seq(StructField("stale", StringType))).json
+      .getBytes(UTF_8))
+    stale.close()
+    assert(Snapshot.read(spark, root).count() == 3)
+    Snapshot.commitDelta(
+      Seq((99L, "x", 1.5)).toDF("id", "payload", "w"), root, "id")
+    val dir = s"$root/_v1_d1"
+    assert(recorded(dir) == inferred(dir))
+    assert(recorded(dir).fieldNames.toSeq == Seq("id", "payload", "w"))
+    assert(Snapshot.read(spark, root).count() == 4)
+  }
+
+  test("snapshot reads launch no jobs; a delta commit adds one " +
+       "inference job to its writes") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(10), root)
+    (1 to 3).foreach { i =>
+      Snapshot.commitDelta(
+        Seq((i.toLong, s"d$i")).toDF("id", "payload"), root, "id")
+    }
+    // building the merged view over base + 3 deltas: no inference jobs
+    assert(jobsDuring { Snapshot.read(spark, root) } == 0)
+    assert(jobsDuring { Snapshot.readVersion(spark, root, 1L) } == 0)
+    // a commit costs exactly what writing its rows costs, plus one job
+    // for the schema it records
+    val delta = Seq((20L, "e")).toDF("id", "payload")
+    val writes = jobsDuring {
+      delta.write.mode("overwrite").parquet(s"${freshRoot()}-plain")
+    }
+    assert(writes >= 1)
+    assert(jobsDuring { Snapshot.commitDelta(delta, root, "id") } ==
+      writes + 1)
+    assert(Snapshot.read(spark, root).count() == 11)
   }
 }

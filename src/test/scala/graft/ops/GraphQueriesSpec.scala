@@ -38,6 +38,19 @@ class GraphQueriesSpec extends AnyFunSuite {
     r.foreach(x => assert(math.abs(x - 0.25) < 1e-12))
   }
 
+  test("q246 HITS on an empty edge set returns no rows") {
+    // orders/lineitem with the fixture's schema and no rows: the L1
+    // totals are null, which must not reach the driver-side division
+    val dir = s"/tmp/graft-test-noedges-${System.nanoTime()}"
+    Seq("orders", "lineitem").foreach { t =>
+      spark.read.parquet(s"${TestSpark.Sf}/$t.parquet").limit(0)
+        .write.parquet(s"$dir/$t.parquet")
+    }
+    val out = graft.SparkEntry.queries("q246_hits")(spark, dir)
+    assert(out.collect().isEmpty)
+    assert(out.columns.toSeq == Seq("kind", "node", "score"))
+  }
+
   test("higher-degree hubs outrank leaves on a star graph") {
     val r = GraphQueries.pagerank(
       undirected((1L, 10L), (2L, 10L), (3L, 10L), (4L, 10L)), 2)
