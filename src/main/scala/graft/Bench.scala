@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR, one
   * JSON line on stdout. Queries execute through the noop sink so the whole
   * plan runs (a bare count() lets Catalyst prune projections and under-times
@@ -44,50 +42,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the r12 median/floor finding: Spark's generated-class cache
-      // holds 100 entries (LRU), and a 300+-query suite cycling through
-      // it misses on EVERY execution — each timed pass then pays full
-      // Janino compilation while the C2 compiler threads churn beside
-      // the measured query (an 8-query probe, fully cache-resident,
-      // ran flat at ±8% where the in-suite medians sat 1.26× over
-      // their floors). Size the cache to the suite so warm-up actually
-      // warms: compiled classes are metaspace, ~50 KB each — thousands
-      // of entries cost tens of MB against a 128 GiB box.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // r14: AQE's coalesce floor defaults to 1 MB — sized for
-      // I/O-bound work at cluster scale, where smaller partitions'
-      // scheduling overhead outweighs their read. Much of this suite's
-      // post-shuffle work is the opposite regime: kilobytes of rows
-      // carrying CPU-heavy verify kernels (sorted-intersect, banded
-      // Hamming, cosine reranks), which a 1 MB floor coalesces onto
-      // 1-3 of the session's cores. parallelismFirst (default on)
-      // targets max(bytes/parallelism, floor); lowering the floor lets
-      // the parallelism term win whenever bytes-per-core is tiny. At
-      // production scale bytes/parallelism >> the floor and the value
-      // is inert (it is a floor, not a target). Env-overridable for
-      // cluster profiles. r15: 64k -> 8k, measured on the PPJoin family
-      // (candidate stages were capped at ~6 tasks over ~400 KB of
-      // postings; at 8k they reach the core count: q165 2.28 -> 1.67 s,
-      // q131 -16%, family floor-sum -4.6%) AND on the sub-second tail
-      // (floor-sum -9%: the CPU-heavy post-shuffle stages dominate the
-      // extra task-scheduling cost at this fixture scale).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "8k"))
-      // r15 measurement knob (guide §2.3): shuffle/spill codec. lz4 (the
-      // default) vs zstd was A/B'd at sf0.1 — see OPTIMIZATION_r15.md;
-      // shuffle volumes here are KB–MB so the local default stays lz4,
-      // the knob is how a cluster profile flips it.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional subset (comma-separated names): lets a dev measure a
     // handful of queries (e.g. the round-over-round comparable tail)
@@ -228,8 +184,8 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","total_floor":$totalFloor,"runs_per_query":$nRuns,"queries":$qs,"floors":$floors,"spread":$spread,"errors":$errs,"sf":"$sfDir"}"""
     println(json)
-    // stdout passes through sbt's [info] logger prefix, which breaks the
-    // driver's JSON parse — also land the line in a file it can read raw.
+    // Also land the line in a file, which holds the result alone: on stdout
+    // it sits among sbt's own log lines.
     // Relative default (cwd = repo root under sbt); best-effort so a bad
     // path can't lose the stdout line after the whole run has finished.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")

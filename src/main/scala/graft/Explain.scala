@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `explain("formatted")` for every declared query so plans
@@ -13,20 +12,9 @@ object Explain {
     val sfDir  = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out    = if (args.length > 1) args(1) else "/tmp/explains.txt"
     val only   = args.drop(2).toSet
-    // session shape matches Bench (r14): extensions registered (the
-    // FuseDotProduct rule changes plan shape) and the same core/shuffle
-    // counts, so the dumped plans are the ones the bench executes.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "8k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session Bench runs, so the dumped plans are the benched plans
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -17,6 +17,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The payload and fact tables whose scan `t` fans out. The fanout hashes
+    * each table's leading column, which assumes that column is the table's
+    * key or a well-spread key: `documents.doc_id`, `embeddings.vec_id` and
+    * `orders.o_orderkey` are unique, `lineitem.l_orderkey` holds at most 12
+    * rows per key (checked on the sf0.001 fixture). A table added here must
+    * lead with such a column, or one hot key lands on one task. */
+  private val FanoutTables = Set("documents", "embeddings", "lineitem", "orders")
+
+  /** Fanout width: one task per this many bytes of file. */
+  private val FanoutTaskBytes = 16384L
+
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects
     // ([PARQUET_TYPE_ILLEGAL]); read it as raw nanos and floor to micros.
@@ -60,9 +71,7 @@ object Tables {
     // dimension tables it was pure fixed tax (+15.2 s net on events
     // alone). The loader knows the table kind (exactly the catalog-hint
     // knowledge a production loader has), so the fanout fires only for
-    // the payload/fact tables; env-overridable for other corpora.
-    val denseTables = sys.env.getOrElse("SPARK_GRAFT_FANOUT_TABLES",
-      "documents,embeddings,lineitem,orders").split(",").map(_.trim).toSet
+    // the payload/fact tables (`FanoutTables`).
     val par = spark.sparkContext.defaultParallelism
     // NonFatal (r15, ADVICE): the intended miss case is a non-local path
     // where Files.size throws an IO error — a fatal error (OOM, linkage)
@@ -72,21 +81,15 @@ object Tables {
     catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
     val splits = math.max(1L,
       bytes / spark.sessionState.conf.filesMaxPartitionBytes)
-    if (!denseTables.contains(name) || splits >= par) df
+    if (!FanoutTables.contains(name) || splits >= par) df
     else {
       // Width scales with input size (r15): one fanout task per
-      // FANOUT_TASK_BYTES of file, capped at the core count — a small
+      // `FanoutTaskBytes` of file, capped at the core count — a small
       // table keeps its 1-task scan (the exchange's fixed scheduling
       // cost exceeds anything it could parallelize) while the
-      // corpus-sized tables still reach every core. `off` disables the
-      // fanout entirely (measurement knob).
-      val taskBytes = sys.env.getOrElse("SPARK_GRAFT_FANOUT_TASK_BYTES", "16384")
-      val width =
-        if (taskBytes == "off") 0L
-        else math.min(par.toLong, bytes / taskBytes.toLong)
+      // corpus-sized tables still reach every core.
+      val width = math.min(par.toLong, bytes / FanoutTaskBytes)
       if (width <= splits) df
-      else if (sys.env.get("SPARK_GRAFT_FANOUT_MODE").contains("rr"))
-        df.repartition(width.toInt) // the r14 spelling (measurement knob)
       else
         // Key-hash fanout (r15, guide §2.5 "derive the synthetic key
         // deterministically"): r14's keyless repartition(n) paid a
@@ -95,7 +98,7 @@ object Tables {
         // retried tasks reproduce their row-to-partition assignment) —
         // serialized on one core by construction here, and the dominant
         // share of the fanout's fixed tax. Hashing the table's leading
-        // column (the primary key on every fixture table) spreads rows
+        // column (a key on every `FanoutTables` entry) spreads rows
         // with NO map-side sort, stays deterministic under task retry
         // by construction, and — unlike hashing every column — leaves
         // column pruning intact (the exchange adds one narrow key

@@ -153,8 +153,8 @@ object DedupQueries extends QueryModule {
     connectedComponentsWithRounds(pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds it ran
-    * — the diagnostic ProfileQ71 reports (probing with increasing maxIter
-    * would redo the whole pair join per attempt). */
+    * — the diagnostic ProfileQ71@cf1ba66 reports (probing with increasing
+    * maxIter would redo the whole pair join per attempt). */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, maxIter: Int): (DataFrame, Int) = {
     // edges hash-partitioned on dst, labels on id: localCheckpoint
@@ -560,7 +560,7 @@ object DedupQueries extends QueryModule {
     // oracle-recomputed) plus two verdicts the oracle asserts TRUE —
     // mean dup Hamming ≤ 14 bits and baseline mean at least 4 bits
     // above it (measured 11.2 vs 17.8-18.3 at sf0.001/0.01/0.1 —
-    // ProbeSimhash; the narrow ~40-word fixture vocabulary compresses
+    // ProbeSimhash@cf1ba66; the narrow ~40-word fixture vocabulary compresses
     // all distances, so the margin is set from the measured floor, not
     // the random-64-bit ideal). A hash-mixing or bit-vote regression
     // collapses the separation toward zero and turns the driver
@@ -704,7 +704,8 @@ object DedupQueries extends QueryModule {
     // verbatim run of ≥ window + k − 1 = 6 tokens MUST share at least
     // one fingerprint — that, not bag similarity, is what winnowing
     // detects (measured: token-Jaccard near-dups share ~0 fingerprints
-    // on this fixture because they share words, not RUNS — ProbeWinnow).
+    // on this fixture because they share words, not RUNS —
+    // ProbeWinnow@cf1ba66).
     // The contract plants the run deterministically: every ≥10-token doc
     // is paired with itself minus its first two tokens (shared suffix
     // run ≥ 8 ≥ 6), and the verdict asserts every such pair shares a

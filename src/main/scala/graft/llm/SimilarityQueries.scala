@@ -184,7 +184,7 @@ object SimilarityQueries extends QueryModule {
     * default): candidates are the UNION of each table's bucket-mates
     * (deduped), then the exact fused cosine reranks and keeps k. The
     * single-table configuration this replaced had measured recall@10 ≈ 0
-    * at every fixture scale (ProbeAnn) — a correct-but-useless index;
+    * at every fixture scale (ProbeAnn@cf1ba66) — a correct-but-useless index;
     * q267 declares the multi-table configuration's measured recall floor
     * as a driver-checked contract. Scale shape: the index is L rows per
     * vector (the documented LSH memory trade), every join equi-keyed,
@@ -656,7 +656,7 @@ object SimilarityQueries extends QueryModule {
     // is plane-seed-specific, but its recall against q38's exact top-10
     // is the property that makes the index USABLE — and this round's
     // measurement found the original single-table configuration at
-    // recall ≈ 0 (ProbeAnn), a correct-but-useless index that only this
+    // recall ≈ 0 (ProbeAnn@cf1ba66), a correct-but-useless index that only this
     // kind of declared contract catches. The multi-table replacement
     // measures ≥ 0.4 per query at sf0.001/0.01/0.1; the declared verdict
     // is ≥ 0.3 (floor minus margin), asserted TRUE by the oracle — an
@@ -684,7 +684,7 @@ object SimilarityQueries extends QueryModule {
     // ‖Σv − λv‖/λ at solver precision, and explained-variance share
     // above the isotropic floor — are verdicts the driver can check.
     // Measured: norm = 1 exactly, residual ≤ 1.4e-13, explained share
-    // 0.0209–0.0289 at sf0.001/0.01/0.1 (ProbePca; isotropic baseline
+    // 0.0209–0.0289 at sf0.001/0.01/0.1 (ProbePca@cf1ba66; isotropic baseline
     // 1/64 ≈ 0.0156); declared bounds 1e-9 / ≥ 0.018. The covariance
     // collect is 64×64 — dimension-bounded, the same driver-side closure
     // q140 itself uses.

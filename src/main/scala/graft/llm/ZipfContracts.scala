@@ -42,7 +42,7 @@ object ZipfContracts extends QueryModule {
       : Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // q250 on the rich domain. Measured recall (deterministic per SF —
-    // ProbeZipfContracts): 0.913 / 0.893 / 0.867 at sf0.001 / 0.01 /
+    // ProbeZipfContracts@cf1ba66): 0.913 / 0.893 / 0.867 at sf0.001 / 0.01 /
     // 0.1, zero invented pairs at all three. The banding formula's
     // ~0.83 expectation at J near 0.6 underestimates because family
     // pairs share correlated POSITIONS, not independent tokens. Verdict
@@ -71,7 +71,7 @@ object ZipfContracts extends QueryModule {
     },
 
     // q266 on the rich domain. Measured (deterministic per SF —
-    // ProbeZipfContracts): dup mean 12.75 / 12.41 / 12.13 bits,
+    // ProbeZipfContracts@cf1ba66): dup mean 12.75 / 12.41 / 12.13 bits,
     // baseline 22.78 / 21.89 / 22.45, separation 10.03 / 9.48 / 10.32
     // — on a 511-type vocabulary the baseline escapes the old domain's
     // compressed distances and the margin widens from 4 bits to ~10.
@@ -124,7 +124,7 @@ object ZipfContracts extends QueryModule {
     // the wrong statistic for LSH (a probe whose exact neighbors are
     // mid-cosine non-family docs can legitimately recall 0.1; measured
     // per-query min 0.10 at sf0.01 while the MEAN holds 0.99 / 0.97 /
-    // 0.99 across sf0.001 / 0.01 / 0.1 — ProbeZipfContracts). Verdict
+    // 0.99 across sf0.001 / 0.01 / 0.1 — ProbeZipfContracts@cf1ba66). Verdict
     // bounds 0.9 on both statistics, under the 0.97 floor.
     "q315_ann_recall_zipf" -> { (s, dir) =>
       val zdocs = familyDocs(s, dir)

@@ -263,7 +263,7 @@ object GraphQueries extends QueryModule {
     // declared graph consumer now runs on the edge plan you'd run at
     // 100×. Core order 2, not q170's 3: the IVF-probed mutual graph is
     // sparser than the exact twin and its 3-core is EMPTY at sf0.01/0.1
-    // (ProbeKcoreRounds measured 0 survivors) — a vacuously-green
+    // (ProbeKcoreRounds@cf1ba66 measured 0 survivors) — a vacuously-green
     // contract; the 2-core survives at every scale (28 @ sf0.01 …
     // 52963 @ 20×, fixpoint ≤ 7 rounds, inside the oracle's 10-round
     // unroll). Same unique-fixpoint argument as q170, so the oracle
@@ -394,7 +394,7 @@ object GraphQueries extends QueryModule {
     // prioritization and influence attribution actually want (hop counts
     // treat a 1-order and a 500-order link identically). 8 relaxation
     // rounds cover the fixture's weighted diameter with margin
-    // (ProbeSsspRounds: fixpoint at 4–5 rounds at sf0.001/0.01/0.1 and
+    // (ProbeSsspRounds@cf1ba66: fixpoint at 4–5 rounds at sf0.001/0.01/0.1 and
     // 10×/20×, flat in scale because the bipartite hop diameter is 4 and
     // extra rounds only reroute through lighter multi-hop detours); the
     // oracle unrolls 9 and guards round 8 = round 9, so growth past the
@@ -508,7 +508,7 @@ object GraphQueries extends QueryModule {
     * winner: each round references the state frame TWICE (carry-over
     * union + relaxation join), so an un-checkpointed 8-round DAG
     * doubles the state subtree per round and ran 2.8× slower
-    * (ProbeSsspShape: 17.5 s vs 6.3 s at sf0.1).
+    * (ProbeSsspShape@cf1ba66: 17.5 s vs 6.3 s at sf0.1).
     * Callers pick `rounds` >= the fixpoint round (probed per fixture);
     * the oracle's trailing guard round turns an insufficient depth
     * into a loud zero-row failure instead of a silent mid-relaxation

@@ -7,8 +7,8 @@
 // Run: sbt "runMain graft.tools.ScaleGen /root/testdata/sf0.1 scaledata/sf1 10"
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{GraftSession, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 object ScaleGen {
@@ -18,11 +18,7 @@ object ScaleGen {
     val src    = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst    = args.lift(1).getOrElse("scaledata/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val cps = spark.range(copies).select(col("id").cast("int").as("cp"))
 

@@ -6,8 +6,7 @@
 // Run: sbt "runMain graft.tools.ScaleProof [queries...]"
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 object ScaleProof {
   val Default = Seq(
@@ -22,12 +21,7 @@ object ScaleProof {
     val names = if (args.nonEmpty) args.toSeq else Default
     val sf01 = "/root/testdata/sf0.1"
     val sf1  = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "scaledata/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def planStats(name: String, dir: String): (Int, Int, Int, Boolean) = {

@@ -13,8 +13,9 @@
 // SCALE_PROOF.md), so 20x conclusions come from solo runs only.
 package graft.tools
 
+import graft.GraftSession
 import graft.llm.SimilarityQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object ScaleProofScaledK {
@@ -27,12 +28,7 @@ object ScaleProofScaledK {
       "sf1"   -> sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "scaledata/sf1")) ++
       (if (new java.io.File("scaledata/sf2").isDirectory)
         Seq("sf2" -> "scaledata/sf2") else Seq.empty)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def emb(dir: String): DataFrame =

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run.
+/** One shared local session for the whole test run, built by
+  * `GraftSession` so the suites plan queries the way Bench runs them.
   *
   * INVARIANT (pinned in build.sbt via testForkedParallel=false): suites
   * execute sequentially in the forked JVM and every suite builds its own
@@ -14,13 +15,8 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-test-warehouse-${System.nanoTime()}")
       .config("spark.sql.streaming.checkpointLocation",

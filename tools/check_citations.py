@@ -11,7 +11,8 @@ a citation with a plausible line range but the WRONG claim (the fabricated-
 citation class) is auditable by reading one file — the range gate alone
 cannot see that.
 
-Usage: python3 tools/check_citations.py  (exit 0 iff all citations resolve)
+Usage: python3 tools/check_citations.py  (exit 0 iff all citations resolve;
+exit 1 without a table when the reference checkout is missing)
 """
 import re, sys
 from pathlib import Path
@@ -27,7 +28,6 @@ FILES = {
     "setup.py": REF / "setup.py",
     "__init__.py": REF / "pyopenetl" / "__init__.py",
 }
-LINES = {m: sum(1 for _ in p.open()) for m, p in FILES.items()}
 
 CITE = re.compile(
     r"(?:pyopenetl/)?(connections|operations|pipelines|setup|__init__)\.py"
@@ -35,6 +35,10 @@ CITE = re.compile(
 
 
 def main():
+    if not all(p.is_file() for p in FILES.values()):
+        print(f"reference checkout not found at {REF}")
+        sys.exit(1)
+    LINES = {m: sum(1 for _ in p.open()) for m, p in FILES.items()}
     bad = []
     n_cites = 0
     review = []  # (scala site, cited span, citing line, source excerpt)
