@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -40,7 +41,7 @@ object Tables {
     // in UTC, so reading it as an instant preserves every face value and
     // matches the oracle's naive-timestamp comparisons.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df0 = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df0 = ParquetSchema.read(spark, s"$sfDir/$name.parquet")
     val df =
       if (name == "events" && df0.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         df0.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.sources.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot seed — `CloudSQLWriter.seed_table`
@@ -19,13 +20,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Seed {
   def seed(spark: SparkSession, srcPath: String, dstPath: String,
            sortCols: Seq[String] = Nil): Unit = {
-    val df  = TypeNormalizer.normalize(spark.read.parquet(srcPath))
+    val df  = TypeNormalizer.normalize(ParquetSchema.read(spark, srcPath))
     val out = if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(df(_)): _*) else df
     out.write.mode("overwrite").parquet(dstPath)
   }
 
   def readBack(spark: SparkSession, dstPath: String): DataFrame =
-    spark.read.parquet(dstPath)
+    ParquetSchema.read(spark, dstPath)
 
   /** Hive-style partitioned seed — the other half of the reference's
     * index-clone analog (W7/W8, operations.py:368-402) for time-series
@@ -51,7 +52,7 @@ object Seed {
     */
   def seedBucketed(spark: SparkSession, srcPath: String, table: String,
                    bucketCol: String, nBuckets: Int): DataFrame = {
-    TypeNormalizer.normalize(spark.read.parquet(srcPath))
+    TypeNormalizer.normalize(ParquetSchema.read(spark, srcPath))
       .write.mode("overwrite").format("parquet")
       .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)

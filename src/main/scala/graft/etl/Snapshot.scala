@@ -2,10 +2,10 @@ package graft.etl
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.sources.ParquetSchema
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Crash-atomic snapshot commit over plain parquet — the reference wraps
   * every chunk write in a transaction (`pyopenetl/operations.py:181`
@@ -16,17 +16,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Layout: `root/_v<N>/` holds complete parquet base snapshots;
   * `root/_v<N>_d<M>/` holds incremental delta snapshots on top of base
   * `<N>` (see [[commitDelta]]); `root/_current` is a one-line pointer file
-  * naming the committed (base, delta-count) pair. Every base and delta
-  * directory also carries `_schema.json`, the schema Spark inferred from
-  * the directory right after writing it; reads pass that schema to the
-  * parquet reader, so resolving a snapshot launches no schema-inference
-  * job (one per directory otherwise, base and every stacked delta).
-  * Directories committed before the file existed have none and are read
-  * with inference. Base commit order:
+  * naming the committed (base, delta-count) pair. Every directory is read
+  * through [[ParquetSchema]], which takes its schema from one parquet
+  * footer on the driver, so resolving a snapshot launches no Spark job
+  * (schema inference would cost one per directory, base and every
+  * stacked delta) and a commit records nothing beside its data.
+  * Directories committed by older code may still hold a `_schema.json`;
+  * its `_` prefix keeps it out of every read. Base commit order:
   *
-  *   1. write the new snapshot into a fresh `_v<N+1>` directory and record
-  *      its `_schema.json` — readers never look at it because the pointer
-  *      still names `<N>`;
+  *   1. write the new snapshot into a fresh `_v<N+1>` directory — readers
+  *      never look at it because the pointer still names `<N>`;
   *   2. write the pointer to a temp file and atomically rename it over
   *      `_current` ([[FileContext.rename]] with OVERWRITE — atomic on
   *      HDFS and POSIX; on S3-likes the pointer is one small object so
@@ -230,37 +229,12 @@ object Snapshot {
         if (p.nDeltas == 0L) base
         else mergedView(base, (1L to p.nDeltas).map(d =>
           readDir(spark, deltaDir(root, p.base, d))), p.pk)
-      case None => spark.read.parquet(root)
+      case None => ParquetSchema.read(spark, root)
     }
 
-  private val SchemaFile = "_schema.json"
-
-  /** Infer the schema of a directory this writer just filled (one Spark
-    * job over a parquet footer) and record it as `_schema.json` inside
-    * the directory. Called before the pointer swap: a crash leaves the
-    * file in a directory no pointer names, and a retried delta commit
-    * overwrites it with the directory. The `_` prefix keeps it out of
-    * Spark's file index. */
-  private def recordSchema(spark: SparkSession, dir: Path): Unit = {
-    val schema = spark.read.parquet(dir.toString).schema
-    val out = dir.getFileSystem(conf(spark))
-      .create(new Path(dir, SchemaFile), true)
-    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
-  }
-
-  /** Read one committed base or delta directory with its recorded schema
-    * (no inference job); a directory committed before schemas were
-    * recorded has no `_schema.json` and falls back to inference. */
-  private def readDir(spark: SparkSession, dir: Path): DataFrame = {
-    val file = new Path(dir, SchemaFile)
-    val reader =
-      try {
-        val in = file.getFileSystem(conf(spark)).open(file)
-        val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
-        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
-      } catch { case _: java.io.FileNotFoundException => spark.read }
-    reader.parquet(dir.toString)
-  }
+  /** Read one base or delta directory, its schema from a footer. */
+  private def readDir(spark: SparkSession, dir: Path): DataFrame =
+    ParquetSchema.read(spark, dir.toString)
 
   /** base ⊎ deltas with latest-wins-per-pk semantics: one union + one
     * window on pk — O(base + Σdeltas) with a single shuffle, not the
@@ -313,7 +287,6 @@ object Snapshot {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(versionDir(root, next).toString)
-    recordSchema(spark, versionDir(root, next))
     beforeSwap()
     swapPointer(spark, root,
       Pointer(next, 0L, pk, partitionCols, newToken()), prevLine)
@@ -371,16 +344,15 @@ object Snapshot {
     * (verified — a key change mid-stack would silently corrupt the
     * merge). A root with no base yet takes the delta as base version 1.
     *
-    * Returns nothing: read the committed table with [[read]]. Beyond its
-    * write jobs a commit launches one schema-inference job, for the
-    * `_schema.json` of the directory it wrote (plus the compaction's own
-    * write and inference when the stack folds).
+    * Returns nothing: read the committed table with [[read]]. A commit
+    * launches only its write jobs (plus the compaction's write when the
+    * stack folds); nothing is inferred or read back.
     *
     * Crash-safety is the base protocol's: a crash before the swap leaves
     * a torn `_d<M+1>` directory the pointer never names — invisible to
-    * readers, and overwritten whole, schema file included, by the retried
-    * commit (the next index is always pointer-count + 1); base commits GC
-    * the whole stack of dead versions.
+    * readers, and overwritten whole by the retried commit (the next index
+    * is always pointer-count + 1); base commits GC the whole stack of dead
+    * versions.
     */
   def commitDelta(delta: DataFrame, root: String, pk: String): Unit = {
     val spark = delta.sparkSession
@@ -395,7 +367,7 @@ object Snapshot {
           // pre-protocol root with live data: upgrade it to base v1 first
           // (one O(table) pass, once), THEN stack the delta — committing
           // the delta as the table would silently drop the legacy rows
-          commit(spark.read.parquet(root), root)
+          commit(ParquetSchema.read(spark, root), root)
           commitDelta(delta, root, pk)
         } else commit(delta, root) // first ever write: delta IS the table
       case Some(p) =>
@@ -410,7 +382,6 @@ object Snapshot {
         val nextD = p.nDeltas + 1
         delta.write.mode("overwrite")
           .parquet(deltaDir(root, p.base, nextD).toString)
-        recordSchema(spark, deltaDir(root, p.base, nextD))
         swapPointer(spark, root,
           Pointer(p.base, nextD, pk, p.partCols, newToken()), prevLine)
         // compaction preserves the base's hive-partition layout (recorded

@@ -23,7 +23,7 @@ sealed trait Source {
 
 /** Parquet lake path — the harness's stand-in for warehouse tables. */
 final case class ParquetSource(path: String) extends Source {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = ParquetSchema.read(spark, path)
 }
 
 /** Schema-inferred CSV (W10/W13 ingest shape). */

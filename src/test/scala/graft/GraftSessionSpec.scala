@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Drift guard for [[GraftSession]]: the test session, every entry point and
   * the benchmark harness plan queries under one set of settings. */
@@ -10,15 +9,6 @@ class GraftSessionSpec extends AnyFunSuite {
 
   // spelled in two parts so this file does not match its own scan
   private val BuilderCall = "SparkSession" + ".builder()"
-
-  private def scalaFiles(root: String): Seq[Path] = {
-    val dir = Paths.get(root)
-    assert(Files.isDirectory(dir),
-      s"$root not found from ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(dir)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
 
   test("the test session carries the factory's plan-shaping settings") {
     val spark = TestSpark.spark
@@ -32,15 +22,8 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("no session is built outside GraftSession") {
-    val sites = for {
-      f <- scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala")
-      if f.getFileName.toString != "GraftSession.scala"
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      code = line.trim
-      // scaladoc and line comments show usage, they build nothing
-      if !code.startsWith("*") && !code.startsWith("//")
-      if code.contains(BuilderCall)
-    } yield s"$f:${i + 1}"
+    val sites = SourceGuard.sites(Seq("src/main/scala", "src/test/scala"),
+      BuilderCall, exempt = "GraftSession.scala")
     assert(sites.isEmpty, s"build the session with GraftSession.builder: $sites")
   }
 

@@ -1,0 +1,31 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Source scans for the drift guards (`GraftSessionSpec`,
+  * `ParquetSchemaSpec`): where a call appears in code. */
+object SourceGuard {
+
+  /** `file:line` of every line under `roots` that contains `call` and is
+    * not a comment line, skipping files named `exempt`. */
+  def sites(roots: Seq[String], call: String, exempt: String): Seq[String] =
+    for {
+      f <- roots.flatMap(scalaFiles)
+      if f.getFileName.toString != exempt
+      (line, i) <- Files.readAllLines(f).asScala.toSeq.zipWithIndex
+      code = line.trim
+      // scaladoc and line comments show usage, they run nothing
+      if !code.startsWith("*") && !code.startsWith("//")
+      if code.contains(call)
+    } yield s"$f:${i + 1}"
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir),
+      s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+}

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run, built by
@@ -27,4 +29,22 @@ object TestSpark {
   }
 
   val Sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs, counted after the listener bus
+    * has delivered every event (before and after, so no earlier job
+    * leaks in and no job of `body` is missed). */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    TestListenerBridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try { body; TestListenerBridge.drainListeners(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
 }

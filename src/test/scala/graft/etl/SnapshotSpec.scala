@@ -3,11 +3,11 @@ package graft.etl
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.TestSpark
+import graft.TestSpark.jobsDuring
+import graft.sources.ParquetSchema
 import org.apache.hadoop.fs.Path
-import org.apache.spark.TestListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
-  StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash-atomicity of the versioned snapshot commit: a writer killed
@@ -29,34 +29,17 @@ class SnapshotSpec extends AnyFunSuite {
   private def fs = new Path("/tmp").getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
-  /** The schema a commit recorded for one directory. */
-  private def recorded(dir: String): StructType = {
-    val in = fs.open(new Path(dir, "_schema.json"))
-    try DataType.fromJson(new String(in.readAllBytes(), UTF_8))
-      .asInstanceOf[StructType]
-    finally in.close()
-  }
+  /** The schema a snapshot read takes for one directory (its footer). */
+  private def footer(dir: String): StructType =
+    ParquetSchema.read(spark, dir).schema
 
   /** What schema inference says about the same directory. */
   private def inferred(dir: String): StructType =
     spark.read.parquet(dir).schema
 
-  /** Spark jobs started while `body` runs, counted after the listener bus
-    * has delivered every event (before and after, so no earlier job
-    * leaks in and no job of `body` is missed). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    TestListenerBridge.drainListeners(sc)
-    sc.addSparkListener(l)
-    try { body; TestListenerBridge.drainListeners(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
+  private def writeFile(path: String, text: String): Unit = {
+    val out = fs.create(new Path(path), true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
   }
 
   test("commit round-trips and bumps the version") {
@@ -361,36 +344,37 @@ class SnapshotSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Snapshot.read(spark, root) }
   }
 
-  test("each committed directory records the schema inference gives") {
+  test("each committed directory reads with the schema inference gives") {
     import spark.implicits._
     val root = freshRoot()
     Snapshot.commit(df(3), root)
-    assert(recorded(s"$root/_v1") == inferred(s"$root/_v1"))
+    assert(footer(s"$root/_v1") == inferred(s"$root/_v1"))
+    assert(Snapshot.read(spark, root).schema == inferred(s"$root/_v1"))
     // deltas that add a column, then drop one
     Snapshot.commitDelta(
       Seq((4L, "d", 7L)).toDF("id", "payload", "extra"), root, "id")
     Snapshot.commitDelta(Seq(5L).toDF("id"), root, "id")
     Seq("_v1_d1", "_v1_d2").foreach { d =>
-      assert(recorded(s"$root/$d") == inferred(s"$root/$d"), d)
+      assert(footer(s"$root/$d") == inferred(s"$root/$d"), d)
     }
-    assert(recorded(s"$root/_v1_d1").fieldNames.contains("extra"))
-    assert(recorded(s"$root/_v1_d2").fieldNames.toSeq == Seq("id"))
-    // the spark-written schema file is no data file: reads see the rows
+    assert(footer(s"$root/_v1_d1").fieldNames.contains("extra"))
+    assert(footer(s"$root/_v1_d2").fieldNames.toSeq == Seq("id"))
+    assert(Snapshot.read(spark, root).schema.fieldNames.toSeq ==
+      Seq("id", "payload", "extra"))
     assert(Snapshot.read(spark, root).count() == 5)
   }
 
-  test("a hive-partitioned commit records the inferred partition types") {
+  test("a hive-partitioned commit reads with the inferred partition types") {
     import spark.implicits._
     val root = freshRoot()
     // a string partition column with numeric-looking values: inference
-    // types it int, and the recorded schema must say the same so reads
-    // through it match reads that infer
+    // types it int, and a read through the footer must say the same
     val data = Seq((1L, "10", "a"), (2L, "20", "b"), (3L, "10", "c"))
       .toDF("id", "bucket", "payload")
     Snapshot.commit(data, root, partitionCols = Seq("bucket"))
     val dir = s"$root/_v1"
     assert(inferred(dir)("bucket").dataType == IntegerType)
-    assert(recorded(dir) == inferred(dir))
+    assert(footer(dir) == inferred(dir))
     val got = Snapshot.read(spark, root)
     assert(got.schema == inferred(dir))
     assert(got.collect().toSet == spark.read.parquet(dir).collect().toSet)
@@ -403,41 +387,66 @@ class SnapshotSpec extends AnyFunSuite {
     Snapshot.commitDelta(Seq((2L, "b2")).toDF("id", "payload"), root, "id")
     Snapshot.commitDelta(
       Seq((9L, "n", 1L)).toDF("id", "payload", "extra"), root, "id")
+    // a commit writes its data and nothing beside it
+    assert(fs.globStatus(new Path(root, "_v*/_schema.json")).isEmpty)
+    val got = Snapshot.read(spark, root)
+    assert(got.schema == StructType(Seq(StructField("id", LongType),
+      StructField("payload", StringType), StructField("extra", LongType))))
+    val rows = got.orderBy("id").collect().toSeq.map(r =>
+      (r.getLong(0), r.getString(1), Option(r.get(2))))
+    assert(rows == Seq((1L, "row1", None), (2L, "b2", None),
+      (3L, "row3", None), (4L, "row4", None), (9L, "n", Some(1L))))
+  }
+
+  test("a stale or bogus _schema.json from older commits is ignored") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(4), root)
+    Snapshot.commitDelta(Seq((2L, "b2")).toDF("id", "payload"), root, "id")
+    Snapshot.commitDelta(
+      Seq((9L, "n", 1L)).toDF("id", "payload", "extra"), root, "id")
     def rows() = Snapshot.read(spark, root).orderBy("id").collect().toSeq
     val before = rows()
-    // a root committed before schema files existed
-    val files = fs.globStatus(new Path(root, "_v*/_schema.json"))
-    assert(files.length == 3)
-    files.foreach(st => fs.delete(st.getPath, false))
+    // directories committed by older code carry a recorded schema; here
+    // one names a column that does not exist, one is not JSON at all
+    writeFile(s"$root/_v1/_schema.json",
+      StructType(Seq(StructField("stale", StringType))).json)
+    writeFile(s"$root/_v1_d1/_schema.json", "{ not a schema")
+    writeFile(s"$root/_v1_d2/_schema.json",
+      StructType(Seq(StructField("id", StringType))).json)
     assert(rows() == before)
     assert(Snapshot.read(spark, root).schema ==
       StructType(Seq(StructField("id", LongType),
         StructField("payload", StringType), StructField("extra", LongType))))
+    Seq("_v1", "_v1_d1", "_v1_d2").foreach { d =>
+      assert(footer(s"$root/$d") == inferred(s"$root/$d"), d)
+    }
   }
 
   test("a retried delta commit replaces a torn directory's schema file") {
     import spark.implicits._
     val root = freshRoot()
     Snapshot.commit(df(3), root)
-    // crash state: _v1_d1 holds torn data and a stale schema file, and
-    // the pointer still names 0 deltas
-    val torn = fs.create(new Path(root, "_v1_d1/part-00000.parquet"), true)
-    torn.write("torn bytes, not parquet".getBytes(UTF_8)); torn.close()
-    val stale = fs.create(new Path(root, "_v1_d1/_schema.json"), true)
-    stale.write(StructType(Seq(StructField("stale", StringType))).json
-      .getBytes(UTF_8))
-    stale.close()
+    // crash state: _v1_d1 holds torn data and an older commit's stale
+    // schema file, and the pointer still names 0 deltas
+    writeFile(s"$root/_v1_d1/part-00000.parquet", "torn bytes, not parquet")
+    writeFile(s"$root/_v1_d1/_schema.json",
+      StructType(Seq(StructField("stale", StringType))).json)
     assert(Snapshot.read(spark, root).count() == 3)
     Snapshot.commitDelta(
       Seq((99L, "x", 1.5)).toDF("id", "payload", "w"), root, "id")
     val dir = s"$root/_v1_d1"
-    assert(recorded(dir) == inferred(dir))
-    assert(recorded(dir).fieldNames.toSeq == Seq("id", "payload", "w"))
-    assert(Snapshot.read(spark, root).count() == 4)
+    assert(footer(dir) == inferred(dir))
+    assert(footer(dir).fieldNames.toSeq == Seq("id", "payload", "w"))
+    assert(!fs.exists(new Path(dir, "_schema.json")))
+    val got = Snapshot.read(spark, root)
+    assert(got.count() == 4)
+    assert(got.filter("id = 99").select("w").collect().map(_.getDouble(0))
+      .toSeq == Seq(1.5))
   }
 
-  test("snapshot reads launch no jobs; a delta commit adds one " +
-       "inference job to its writes") {
+  test("snapshot reads launch no jobs; a delta commit launches only " +
+       "its writes") {
     import spark.implicits._
     val root = freshRoot()
     Snapshot.commit(df(10), root)
@@ -448,15 +457,13 @@ class SnapshotSpec extends AnyFunSuite {
     // building the merged view over base + 3 deltas: no inference jobs
     assert(jobsDuring { Snapshot.read(spark, root) } == 0)
     assert(jobsDuring { Snapshot.readVersion(spark, root, 1L) } == 0)
-    // a commit costs exactly what writing its rows costs, plus one job
-    // for the schema it records
+    // a commit costs exactly what writing its rows costs
     val delta = Seq((20L, "e")).toDF("id", "payload")
     val writes = jobsDuring {
       delta.write.mode("overwrite").parquet(s"${freshRoot()}-plain")
     }
     assert(writes >= 1)
-    assert(jobsDuring { Snapshot.commitDelta(delta, root, "id") } ==
-      writes + 1)
+    assert(jobsDuring { Snapshot.commitDelta(delta, root, "id") } == writes)
     assert(Snapshot.read(spark, root).count() == 11)
   }
 }
