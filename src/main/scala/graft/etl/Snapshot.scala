@@ -3,7 +3,7 @@ package graft.etl
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.sources.ParquetSchema
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,17 +131,26 @@ object Snapshot {
 
   private def commitsDir(root: String) = new Path(root, "_commits")
 
+  /** The `_commits/` markers matching `glob` (`v<base>_d<n>` names);
+    * none when `_commits` does not exist yet (legacy roots). */
+  private def markers(fs: FileSystem, root: String, glob: String)
+      : Seq[FileStatus] =
+    Option(fs.globStatus(new Path(commitsDir(root), glob))).toSeq.flatten
+
+  /** The base versions some pointer swap has committed: one per marker
+    * base, whether or not its data directory is still retained. */
+  private def committedBases(fs: FileSystem, root: String): Set[Long] =
+    markers(fs, root, "v*_d*")
+      .flatMap(_.getPath.getName.stripPrefix("v")
+        .takeWhile(_ != '_').toLongOption).toSet
+
   /** Time-travel surface: the base versions currently readable via
     * [[readVersion]] — committed versions whose data directories the GC
     * still retains (the newest `retain` bases; see [[commitHooked]]'s
     * grace-window rule), oldest first. */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val cd = commitsDir(root)
-    val fs = cd.getFileSystem(conf(spark))
     val committed =
-      Option(fs.globStatus(new Path(cd, "v*_d*"))).toSeq.flatten
-        .flatMap(_.getPath.getName.stripPrefix("v")
-          .takeWhile(_ != '_').toLongOption).toSet
+      committedBases(commitsDir(root).getFileSystem(conf(spark)), root)
     listVersions(spark, root).filter(committed).sorted
   }
 
@@ -168,9 +177,7 @@ object Snapshot {
       require(fs.exists(dir),
         s"version $version is not retained at $root " +
           s"(readable: ${versions(spark, root).mkString(", ")})")
-      val cd = commitsDir(root)
-      val marker =
-        Option(fs.globStatus(new Path(cd, s"v${version}_d*"))).toSeq.flatten
+      val marker = markers(fs, root, s"v${version}_d*")
         .sortBy(_.getPath.getName.split("_d").last.toLong)
         .lastOption
         .getOrElse(throw new IllegalArgumentException(
@@ -179,10 +186,7 @@ object Snapshot {
       val in = fs.open(marker.getPath)
       val p = try parsePointer(new String(in.readAllBytes(), UTF_8))
         finally in.close()
-      val base = readDir(spark, dir)
-      if (p.nDeltas == 0L) base
-      else mergedView(base, (1L to p.nDeltas).map(d =>
-        readDir(spark, deltaDir(root, version, d))), p.pk)
+      resolve(spark, root, p)
     }
   }
 
@@ -225,12 +229,19 @@ object Snapshot {
         val dir = versionDir(root, p.base)
         require(dir.getFileSystem(conf(spark)).exists(dir),
           s"snapshot pointer names _v${p.base} but the directory is missing: $root")
-        val base = readDir(spark, dir)
-        if (p.nDeltas == 0L) base
-        else mergedView(base, (1L to p.nDeltas).map(d =>
-          readDir(spark, deltaDir(root, p.base, d))), p.pk)
+        resolve(spark, root, p)
       case None => ParquetSchema.read(spark, root)
     }
+
+  /** The table a pointer state names: its base directory with deltas
+    * 1..nDeltas folded in ([[mergedView]]). */
+  private def resolve(spark: SparkSession, root: String, p: Pointer)
+      : DataFrame = {
+    val base = readDir(spark, versionDir(root, p.base))
+    if (p.nDeltas == 0L) base
+    else mergedView(base, (1L to p.nDeltas).map(d =>
+      readDir(spark, deltaDir(root, p.base, d))), p.pk)
+  }
 
   /** Read one base or delta directory, its schema from a footer. */
   private def readDir(spark: SparkSession, dir: Path): DataFrame =
@@ -297,12 +308,7 @@ object Snapshot {
     // no marker and always dies). retain=2 is the minimum grace window:
     // an in-flight reader may hold a pointer resolved just before the
     // swap, deltas included; larger values are the time-travel policy.
-    val committed =
-      (Option(fs.globStatus(new Path(commitsDir(root), "v*_d*"))).toSeq
-        .flatten
-        .flatMap(_.getPath.getName.stripPrefix("v")
-          .takeWhile(_ != '_').toLongOption)
-        .toSet ++ prev.map(_.base)) - next
+    val committed = (committedBases(fs, root) ++ prev.map(_.base)) - next
     val keep = committed.toSeq.sorted.takeRight(retain - 1).toSet + next
     seen.filterNot(keep)
       .foreach { v =>
@@ -311,10 +317,9 @@ object Snapshot {
           .foreach(d => fs.delete(deltaDir(root, v, d), true))
         // markers die with their version (readVersion lists data dirs
         // first, but a live marker for dead data would make the error
-        // message lie about what is readable); globStatus is null when
-        // _commits does not exist yet (legacy roots)
-        Option(fs.globStatus(new Path(commitsDir(root), s"v${v}_d*")))
-          .toSeq.flatten.foreach(st => fs.delete(st.getPath, false))
+        // message lie about what is readable)
+        markers(fs, root, s"v${v}_d*")
+          .foreach(st => fs.delete(st.getPath, false))
       }
     // first commit over a legacy plain-parquet root: drop the pre-protocol
     // top-level files, otherwise a reader still on the old contract

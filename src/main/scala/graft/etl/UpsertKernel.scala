@@ -89,14 +89,9 @@ object UpsertKernel {
     */
   def upsertWithStats(old: DataFrame, src: DataFrame, pk: String,
                       deltaCol: String, asOf: Column, lookbackHours: Int)
-      : DataFrame = {
-    val delta = src.filter(
-      col(deltaCol) >= asOf - expr(s"INTERVAL $lookbackHours HOURS"))
-    val merged = merge(old, delta, pk)
-    merged
-      .join(src.select(pk), Seq(pk), "left_semi")
+      : DataFrame =
+    upsert(old, src, pk, deltaCol, asOf, lookbackHours)
       .observe("upsert_stats", count(lit(1)).as("rows_result"))
-  }
 
   /** PK-uniqueness invariant — the Spark stand-in for the reference's
     * UNIQUE constraint (`operations.py:346-352`); Spark has no constraints,

@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Bit-compatible with the declarative form (asserted hash-for-hash in
   * FusedExprPropertiesSpec):
-  *  - tokens split on a single space, trailing empties kept (Spark
-  *    `split(text, " ")`);
+  *  - tokens split on a single space, trailing empties kept
+  *    ([[graft.llm.Tokens.words]]);
   *  - token hash = SQL `xxhash64(tok)` (seed 42);
   *  - lane i's value = SQL `xxhash64(i, th)` = hash chained over an int
   *    literal then the token hash — the int-literal stage is a per-lane
@@ -59,7 +59,7 @@ case class MinHashBands(child: Expression, numHashes: Int, bands: Int)
       XxHash64Function.hash(i, IntegerType, 42L))
 
   def bandHashes(u: UTF8String): GenericArrayData = {
-    // -1 limit matches Spark's split(text, " "): trailing empties kept
+    // -1 limit keeps trailing empties, matching graft.llm.Tokens.words
     val parts = u.toString.split(" ", -1)
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var t = 0

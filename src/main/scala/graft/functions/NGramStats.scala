@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The declarative spelling builds the n-gram string array, then
   * re-aggregates it once per statistic (and per-distinct-token for the
   * top count — O(L·D)); here one split and one hash-count pass serve all
-  * four. Tokenization matches Spark's `split(text, " ")` (trailing
+  * four. Tokenization matches [[graft.llm.Tokens.words]] (trailing
   * empties kept), n-grams join on a single space — identical strings to
   * the HOF spelling, asserted on random corpora in
   * FusedExprPropertiesSpec. Documents with fewer than n tokens return
@@ -42,7 +42,7 @@ case class NGramStats(child: Expression, n: Int)
       s"expected string input, got ${child.dataType}")
 
   def stats(u: UTF8String): InternalRow = {
-    // -1 limit matches Spark's split(text, " "): trailing empties kept
+    // -1 limit keeps trailing empties, matching graft.llm.Tokens.words
     val parts = u.toString.split(" ", -1)
     val total = parts.length - n + 1
     if (total <= 0) return InternalRow(0L, 0L, 0L, 0L)

@@ -41,7 +41,7 @@ case class ShingleHashes(child: Expression, k: Int)
       s"expected string input, got ${child.dataType}")
 
   def shingles(u: UTF8String): GenericArrayData = {
-    // -1 limit matches Spark's split(text, " "): trailing empties kept
+    // -1 limit keeps trailing empties, matching graft.llm.Tokens.words
     val parts = u.toString.split(" ", -1)
     val n = parts.length - k + 1
     if (n <= 0) return new GenericArrayData(Array.emptyLongArray)

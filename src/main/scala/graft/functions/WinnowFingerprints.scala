@@ -40,7 +40,7 @@ case class WinnowFingerprints(child: Expression, window: Int)
       s"expected string input, got ${child.dataType}")
 
   def fingerprint(u: UTF8String): GenericArrayData = {
-    // -1 limit matches Spark's split(text, " "): trailing empties kept
+    // -1 limit keeps trailing empties, matching graft.llm.Tokens.words
     val parts = u.toString.split(" ", -1)
     val nsh = parts.length - 2
     if (nsh < window) return new GenericArrayData(Array.emptyLongArray)

@@ -84,7 +84,7 @@ object CorpusQueries extends QueryModule {
     "q65_doc_chunks" -> { (s, dir) =>
       val chunkSize = 50
       val stride = 40
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       Tables.t(s, dir, "documents")
         .select(col("doc_id"), tok.as("tok"),
           posexplode(sequence(lit(1), greatest(size(tok) - (chunkSize - stride),
@@ -117,7 +117,7 @@ object CorpusQueries extends QueryModule {
       val bucketWidth = 500L
       val d = Tables.t(s, dir, "documents")
         .select(col("doc_id"),
-          (size(split(col("text"), " ")) + 1).cast("long").as("n")) // +1 EOS
+          (size(Tokens.words(col("text"))) + 1).cast("long").as("n")) // +1 EOS
         .withColumn("bucket", expr(s"doc_id div $bucketWidth"))
       val wLocal = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
       val local = d.withColumn("local_cume", sum(col("n")).over(wLocal))
@@ -147,7 +147,7 @@ object CorpusQueries extends QueryModule {
     // the corpus is touched exactly once, by the word-frequency count.
     "q95_bpe_merge_stats" -> { (s, dir) =>
       val freqs = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
+        .select(explode(Tokens.words(col("text"))).as("word"))
         .filter(length(col("word")) >= 2)
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       val pair = freqs
@@ -165,7 +165,7 @@ object CorpusQueries extends QueryModule {
     // same k merges, with piece counts (the fertility denominator).
     "q310_bpe_encode" -> { (s, dir) =>
       val freqs = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
+        .select(explode(Tokens.words(col("text"))).as("word"))
         .filter(length(col("word")) >= 2)
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       bpeEncode(freqs, BpeRounds)
@@ -177,7 +177,7 @@ object CorpusQueries extends QueryModule {
     // training actually ships).
     "q301_bpe_train" -> { (s, dir) =>
       val freqs = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
+        .select(explode(Tokens.words(col("text"))).as("word"))
         .filter(length(col("word")) >= 2)
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       bpeTrain(freqs, BpeRounds)
@@ -217,11 +217,10 @@ object CorpusQueries extends QueryModule {
     // [ \t\n\f\r], because \s itself diverges (Java includes U+000B
     // vertical tab, RE2 does not).
     "q66_clean_text" -> { (s, dir) =>
-      val stripped = regexp_replace(col("text"), "<[^>]*>", " ")
-      val collapsed = trim(regexp_replace(stripped, "[ \\t\\n\\f\\r]+", " "))
+      val collapsed = Tokens.untagged(col("text"))
       Tables.t(s, dir, "documents")
         .select(col("doc_id"),
-          lower(collapsed).as("clean_text"),
+          Tokens.clean(col("text")).as("clean_text"),
           length(collapsed).cast("long").as("clean_chars"),
           (length(col("text")) - length(collapsed)).cast("long")
             .as("removed_chars"))
@@ -263,7 +262,7 @@ object CorpusQueries extends QueryModule {
     // takes no raw arrays).
     "q98_postings_index" -> { (s, dir) =>
       val tfd = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .select(col("doc_id"), explode(Tokens.words(col("text"))).as("token"))
         .groupBy(col("token"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
       val w = Window.partitionBy(col("token")).orderBy(col("doc_id").asc)
@@ -290,28 +289,19 @@ object CorpusQueries extends QueryModule {
       import org.apache.spark.sql.expressions.Window
       val chunkSize = 50
       val stride = 40
-      val stripped  = regexp_replace(col("text"), "<[^>]*>", " ")
-      val collapsed = trim(regexp_replace(stripped, "[ \\t\\n\\f\\r]+", " "))
       val cleaned = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), lower(collapsed).as("clean_text"))
-      val tok   = split(col("clean_text"), " ")
-      val nTok  = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Seq("the", "a", "of", "and", "to")))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
-      val quality = nDist / nTok * lit(0.5) +
-        (lit(1.0) - nStop / nTok) * lit(0.5)
+        .select(col("doc_id"), Tokens.clean(col("text")).as("clean_text"))
+      val tok = Tokens.words(col("clean_text"))
       val w = Window.partitionBy(col("h")).orderBy(col("doc_id"))
       val canonical = cleaned
-        .filter(size(tok) >= 10 && quality >= 0.6)
+        .filter(size(tok) >= 10 && Tokens.gate(tok).quality >= 0.6)
         .withColumn("h", md5(col("clean_text").cast("binary")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-      val ctok = split(col("clean_text"), " ")
       canonical
-        .select(col("doc_id"), ctok.as("tok"),
+        .select(col("doc_id"), tok.as("tok"),
           posexplode(sequence(lit(1),
-            greatest(size(ctok) - (chunkSize - stride), lit(1)),
+            greatest(size(tok) - (chunkSize - stride), lit(1)),
             lit(stride))).as(Seq("chunk_id", "start")))
         .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
           size(slice(col("tok"), col("start"), lit(chunkSize)))
@@ -353,7 +343,7 @@ object CorpusQueries extends QueryModule {
     // aggregation — no all-pairs term, and per-span state is one row.
     "q96_span_dedup" -> { (s, dir) =>
       val span = 20
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       val units = Tables.t(s, dir, "documents")
         // materialize tok with the generator, slice in the NEXT projection
         // (slicing inside a lambda re-evaluates the split per span)
@@ -461,16 +451,15 @@ object CorpusQueries extends QueryModule {
     // spelling (filter-per-distinct-token) is O(L·D), quadratic on
     // exactly the long documents a 100 TB sweep is full of.
     "q88_quality_rules" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val n = size(tok).cast("double")
+      val tok = Tokens.words(col("text"))
+      val g = Tokens.gate(tok)
+      val n = g.nTok
       val sumLen = aggregate(tok, lit(0L),
         (acc: Column, t: Column) => acc + length(t).cast("long"))
       val meanLen = sumLen.cast("double") / n
       val alphaFrac = size(filter(tok,
         (t: Column) => t.rlike("[a-z]"))).cast("double") / n
-      val stopFrac = size(filter(tok, (t: Column) =>
-        t.isInCollection(Seq("the", "a", "of", "and", "to"))))
-        .cast("double") / n
+      val stopFrac = g.stopRatio
       val topTokFrac = graft.functions.NGramStats.ngramStats(col("text"), 1)
         .getField("top").cast("double") / n
       val pass = size(tok).between(50, 100000) &&
@@ -497,7 +486,7 @@ object CorpusQueries extends QueryModule {
     // differently), summed per doc with the exact-decimal dsum; ties on the
     // rounded score break by doc_id.
     "q100_bm25_rank" -> { (s, dir) =>
-      val toks = split(col("text"), " ")
+      val toks = Tokens.words(col("text"))
       val tok = Tables.t(s, dir, "documents")
         .select(col("doc_id"), size(toks).cast("long").as("dl"),
           explode(toks).as("token"))
@@ -506,7 +495,7 @@ object CorpusQueries extends QueryModule {
         .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
       val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
       val stats = Tables.t(s, dir, "documents")
-        .select(size(split(col("text"), " ")).cast("long").as("dl0"))
+        .select(size(Tokens.words(col("text"))).cast("long").as("dl0"))
         .agg(count(lit(1)).as("n_docs"), sum(col("dl0")).as("tok_total"))
       val avgdl = col("tok_total").cast("double") / col("n_docs").cast("double")
       val idf = log((col("n_docs").cast("double") - col("df").cast("double")
@@ -551,7 +540,7 @@ object CorpusQueries extends QueryModule {
     // never corpus-row-sized; the marginals join is vocab × sources.
     "q106_source_divergence" -> { (s, dir) =>
       val cs = Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t"))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c_st"))
       // token marginal as a window over the (source, token) counts — one
       // repartition instead of an aggregate + equi-join; the per-source
@@ -583,7 +572,7 @@ object CorpusQueries extends QueryModule {
     // — bounded state, vocabulary-sized shuffles only.
     "q112_distinctive_terms" -> { (s, dir) =>
       val cs = Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t"))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c_st"))
       val wT = Window.partitionBy(col("t"))
       val wc = cs.withColumn("c_t", sum(col("c_st")).over(wT))
@@ -616,13 +605,7 @@ object CorpusQueries extends QueryModule {
     // the presentation sort. quality² * 65536 is one fixed IEEE tree
     // over exact-int-derived doubles, so both engines admit the same set.
     "q115_importance_sample" -> { (s, dir) =>
-      val tok  = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Seq("the", "a", "of", "and", "to")))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
-      val quality = nDist / nTok * lit(0.5) +
-        (lit(1.0) - nStop / nTok) * lit(0.5)
+      val quality = Tokens.gate(Tokens.words(col("text"))).quality
       Tables.t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           round(quality, 4).as("quality"),
@@ -763,13 +746,13 @@ object CorpusQueries extends QueryModule {
     // equi-join, riding the same checkpointed postings.
     "q288_kmv_intersection" -> { (s, dir) =>
       val K = 256
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       val grams = Tables.t(s, dir, "documents")
         // materialize tok with the generator, slice in the NEXT
         // projection (the q96 recipe — a lambda over split(text) would
         // re-split per bigram); sequence(1, n) needs n >= 1 (it counts
         // DOWN otherwise), hence the >= 2 token guard
-        .select(col("source"), split(col("text"), " ").as("tok"))
+        .select(col("source"), Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(col("source"), explode(expr(
           "transform(sequence(1, size(tok) - 1)," +
@@ -845,13 +828,7 @@ object CorpusQueries extends QueryModule {
     // lesson. Both engines compare identical IEEE quality doubles against
     // identical rounded cuts, so buckets agree bit-for-bit.
     "q127_curriculum" -> { (s, dir) =>
-      val tok  = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Seq("the", "a", "of", "and", "to")))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
-      val quality = nDist / nTok * lit(0.5) +
-        (lit(1.0) - nStop / nTok) * lit(0.5)
+      val quality = Tokens.gate(Tokens.words(col("text"))).quality
       val docs = Tables.t(s, dir, "documents")
         .select(col("doc_id"), quality.as("q"))
       val cuts = docs.agg(expr(
@@ -877,7 +854,7 @@ object CorpusQueries extends QueryModule {
     // corpus size. Counts are exact longs; the share is one IEEE division
     // per bucket row.
     "q133_length_histogram" -> { (s, dir) =>
-      val ntok = size(split(col("text"), " ")).cast("long")
+      val ntok = size(Tokens.words(col("text"))).cast("long")
       val byBucket = Tables.t(s, dir, "documents")
         .select((floor(ntok.cast("double") / lit(64.0)).cast("long")
           * 64).as("bucket"), ntok.as("n"))
@@ -912,7 +889,7 @@ object CorpusQueries extends QueryModule {
       val toksD = col("tokens_s").cast("double")
       Tables.t(s, dir, "documents")
         .groupBy(col("source"))
-        .agg(sum(size(split(col("text"), " ")).cast("long")).as("tokens_s"))
+        .agg(sum(size(Tokens.words(col("text"))).cast("long")).as("tokens_s"))
         .withColumn("total", sum(col("tokens_s")).over(tot))
         .withColumn("n_sources", count(lit(1)).over(tot))
         .select(col("source"), col("tokens_s"),
@@ -933,7 +910,7 @@ object CorpusQueries extends QueryModule {
     // result is order-independent and oracle-bit-identical.
     "q135_token_entropy" -> { (s, dir) =>
       tokenEntropyOf(Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t")))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t")))
     },
 
     // q135 on the Zipf-regenerated corpus ([[TextQueries.zipfTokArray]]):
@@ -977,7 +954,7 @@ object CorpusQueries extends QueryModule {
     // sized result.
     "q139_packing_efficiency" -> { (s, dir) =>
       Tables.t(s, dir, "documents")
-        .select(size(split(col("text"), " ")).cast("long").as("n_tok"))
+        .select(size(Tokens.words(col("text"))).cast("long").as("n_tok"))
         .select(col("n_tok"),
           explode(array(lit(128L), lit(256L), lit(512L))).as("max_len"))
         .withColumn("chunks", expr("(n_tok + max_len - 1) div max_len"))
@@ -1010,7 +987,7 @@ object CorpusQueries extends QueryModule {
     // half-boundary).
     "q145_vocab_coverage" -> { (s, dir) =>
       vocabCoverageOf(Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t")))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t")))
     },
 
     // q145 on the Zipf-regenerated corpus: the coverage points spread
@@ -1035,7 +1012,7 @@ object CorpusQueries extends QueryModule {
     // order-independent exact-decimal sum.
     "q149_source_kl" -> { (s, dir) =>
       val tokc = Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("token"))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("token"))
         .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
       val totals = tokc.groupBy(col("source")).agg(sum(col("c")).as("n_tok"))
       val vocabN = tokc.select(col("token")).distinct()
@@ -1076,7 +1053,7 @@ object CorpusQueries extends QueryModule {
         .cast("binary")), 1, 4), 16, 10).cast("long")
       Tables.t(s, dir, "documents")
         .select((h % 16).as("shard"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"))
+          size(Tokens.words(col("text"))).cast("long").as("n_tokens"))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
         .withColumn("token_share",
@@ -1097,7 +1074,7 @@ object CorpusQueries extends QueryModule {
     // #sources rows. All masses are exact longs.
     "q161_oov_rate" -> { (s, dir) =>
       val sc = Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("token"))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("token"))
         .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
       val top = sc.groupBy(col("token")).agg(sum(col("c")).as("tc"))
         .orderBy(col("tc").desc, col("token").asc).limit(1000)
@@ -1127,11 +1104,8 @@ object CorpusQueries extends QueryModule {
     // both engines (the q102/q135 LN precedent). Keys round to 6 for
     // presentation only — selection compares unrounded.
     "q164_weighted_sample" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
       // weight: distinct-ratio quality in (0, 1] — richer docs likelier
-      val wgt = nDist / nTok
+      val wgt = Tokens.gate(Tokens.words(col("text"))).distinctRatio
       val u = (conv(substring(md5(col("doc_id").cast("string")
         .cast("binary")), 1, 8), 16, 10).cast("double") + lit(1.0)) /
         lit(4294967297.0)
@@ -1158,9 +1132,7 @@ object CorpusQueries extends QueryModule {
     // (key, doc_id) total order — the oracle STATES the window
     // spelling, so the driver hash-checks that heap-merge == sort.
     "q303_weighted_sample_agg" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val wgt = size(array_distinct(tok)).cast("double") /
-        size(tok).cast("double")
+      val wgt = Tokens.gate(Tokens.words(col("text"))).distinctRatio
       val u = (conv(substring(md5(col("doc_id").cast("string")
         .cast("binary")), 1, 8), 16, 10).cast("double") + lit(1.0)) /
         lit(4294967297.0)
@@ -1265,9 +1237,7 @@ object CorpusQueries extends QueryModule {
     // sf0.1, 13.8 s → 1.4 s at sf1), one (source, r) aggregation via the exact-decimal sum, and
     // a #sources-row percentile rollup over 32 resample means.
     "q177_bootstrap_ci" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val x = size(array_distinct(tok)).cast("double") /
-        size(tok).cast("double")
+      val x = Tokens.gate(Tokens.words(col("text"))).distinctRatio
       val u = (conv(col("h"), 16, 10).cast("double") + lit(1.0)) /
         lit(4294967297.0)
       val k = when(u < 0.36787944117144233, 0L)
@@ -1309,9 +1279,7 @@ object CorpusQueries extends QueryModule {
     // would be partitioning-dependent). Per-source windows + one
     // aggregation; #sources rows out.
     "q181_rank_correlation" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val y = size(array_distinct(tok)).cast("double") /
-        size(tok).cast("double")
+      val y = Tokens.gate(Tokens.words(col("text"))).distinctRatio
       val wX = Window.partitionBy(col("source")).orderBy(col("n_chars"))
       val wXt = Window.partitionBy(col("source"), col("n_chars"))
       val wY = Window.partitionBy(col("source")).orderBy(col("y"))
@@ -1391,9 +1359,7 @@ object CorpusQueries extends QueryModule {
     // Both windows ride one per-source partitioning; dominance compares
     // engine-identical doubles, so the frontier is exactly reproducible.
     "q185_skyline" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val y = size(array_distinct(tok)).cast("double") /
-        size(tok).cast("double")
+      val y = Tokens.gate(Tokens.words(col("text"))).distinctRatio
       val wLonger = Window.partitionBy(col("source"))
         .orderBy(col("n_chars"))
         .rangeBetween(1L, Window.unboundedFollowing)
@@ -1451,7 +1417,7 @@ object CorpusQueries extends QueryModule {
     "q191_sliding_chunks" -> { (s, dir) =>
       val win = 20; val stride = 10
       Tables.t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tok"))
+        .select(col("doc_id"), Tokens.words(col("text")).as("tok"))
         .select(col("doc_id"), size(col("tok")).as("n"), posexplode(expr(
           // CAST pins the struct fields to INT: `div` yields LONG, and
           // the oracle's GENERATE_SERIES casts to INTEGER
@@ -1610,7 +1576,7 @@ object CorpusQueries extends QueryModule {
         .select(col("doc_id"), col("source"),
           coalesce(col("donor_text"), col("text")).as("text"))
         .transform(graft.Checkpoints.ckpt)
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       val n = size(tok)
       val sumLen = aggregate(tok, lit(0L),
         (acc: Column, t: Column) => acc + length(t).cast("long"))
@@ -1637,12 +1603,7 @@ object CorpusQueries extends QueryModule {
         .filter(col("_rn") === 1).drop("_rn").transform(graft.Checkpoints.ckpt)
       val n2 = s2.count()
       graft.Checkpoints.free(s1)
-      val d3 = s2.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(tok,
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d3, 0.6, presentationSort = false)
-      val cc = DedupQueries.connectedComponents(pairs)
+      val cc = DedupQueries.nearDupClusters(s2)
       val s3 = s2.join(cc.filter(col("id") =!= col("label"))
         .select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
         .transform(graft.Checkpoints.ckpt)
@@ -1703,7 +1664,7 @@ object CorpusQueries extends QueryModule {
         .select(col("doc_id"), col("source"),
           coalesce(col("donor_text"), col("text")).as("text"))
         .transform(graft.Checkpoints.ckpt)
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       val n = size(tok)
       val sumLen = aggregate(tok, lit(0L),
         (acc: Column, t: Column) => acc + length(t).cast("long"))
@@ -1733,12 +1694,7 @@ object CorpusQueries extends QueryModule {
         .filter(col("_rn") === 1).drop("_rn").transform(graft.Checkpoints.ckpt)
       val n3 = s3.count()
       graft.Checkpoints.free(s2)
-      val d4 = s3.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(tok,
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d4, 0.6, presentationSort = false)
-      val cc = DedupQueries.connectedComponents(pairs)
+      val cc = DedupQueries.nearDupClusters(s3)
       val s4 = s3.join(cc.filter(col("id") =!= col("label"))
         .select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
         .transform(graft.Checkpoints.ckpt)
@@ -1807,7 +1763,7 @@ object CorpusQueries extends QueryModule {
     // is filtered to it. At 100 TB the key becomes a 128-bit hash with
     // text re-attached to the tiny result by one join.
     "q239_boilerplate_spans" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       Tables.t(s, dir, "documents")
         .select(col("doc_id"), tok.as("tok"))
         .filter(size(col("tok")) >= 8)
@@ -1830,7 +1786,7 @@ object CorpusQueries extends QueryModule {
     // doc×doc. Output is one row per document with exact counts and
     // one share division.
     "q240_boilerplate_share" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       val sh = Tables.t(s, dir, "documents")
         .select(col("doc_id"), tok.as("tok"))
         .filter(size(col("tok")) >= 8)
@@ -1872,7 +1828,7 @@ object CorpusQueries extends QueryModule {
       val tgt = Seq("src0", "src1", "src2", "src3")
       val bg = Tables.t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
-          split(col("text"), " ").as("tok"))
+          Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(col("doc_id"), col("source"), explode(expr(
           "transform(sequence(1, size(tok) - 1), " +

@@ -33,7 +33,7 @@ object DedupQueries extends QueryModule {
     */
   def signatures(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"),
-      transform(array_distinct(split(col("text"), " ")),
+      transform(array_distinct(Tokens.words(col("text"))),
         (t: Column) => xxhash64(t)).as("th"))
     val sigs = (0 until NumHashes).map(i =>
       array_min(transform(col("th"), (h: Column) => xxhash64(lit(i), h)))
@@ -95,8 +95,7 @@ object DedupQueries extends QueryModule {
     // arrays allocation-free — array_intersect would build a hash set per
     // candidate pair, the dominant cost at high near-dup density
     val toks = docs.select(col("doc_id"),
-      array_sort(array_distinct(transform(split(col("text"), " "),
-        (t: Column) => xxhash64(t)))).as("tok"))
+      Tokens.hashedSet(Tokens.words(col("text"))).as("tok"))
     val cand = candidatePairs(docs)
     cand
       .join(toks.select(col("doc_id").as("a_id"), col("tok").as("a_tok")), "a_id")
@@ -120,7 +119,7 @@ object DedupQueries extends QueryModule {
     */
   def simhash(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"),
-      explode(array_distinct(split(col("text"), " "))).as("token"))
+      explode(array_distinct(Tokens.words(col("text")))).as("token"))
       .withColumn("h", xxhash64(col("token")))
     val bitSums = (0 until 64).map(i =>
       sum(when(col("h").bitwiseAND(lit(1L << i)) =!= 0, 1).otherwise(-1))
@@ -151,6 +150,24 @@ object DedupQueries extends QueryModule {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsWithRounds(pairs, maxIter)._1
+
+  /** Token-set Jaccard at or above which two same-source documents are
+    * near-duplicates (q34's relation). */
+  val NearDupJaccard = 0.6
+
+  /** The exact near-dup pairs `(source, a_id, b_id, jaccard)` of a
+    * `(doc_id, source, text)` frame: [[Tokens.tokenSets]] through the
+    * prefix-filtered join at [[NearDupJaccard]], unsorted (consumers
+    * join or aggregate the edge set, so a total sort is waste). */
+  def nearDupPairs(docs: DataFrame): DataFrame =
+    TextQueries.prefixJaccardPairs(Tokens.tokenSets(docs), NearDupJaccard,
+      presentationSort = false)
+
+  /** `(id, label)`: the [[connectedComponents]] of [[nearDupPairs]] —
+    * every near-duplicated document labeled with its cluster's minimum
+    * doc_id. */
+  def nearDupClusters(docs: DataFrame): DataFrame =
+    connectedComponents(nearDupPairs(docs))
 
   /** [[connectedComponents]] plus the number of propagation rounds it ran
     * — the diagnostic ProfileQ71@cf1ba66 reports (probing with increasing
@@ -257,7 +274,7 @@ object DedupQueries extends QueryModule {
     * invariants are ScalaTest-checked.
     */
   def winnowFingerprints(docs: DataFrame): DataFrame = {
-    val tok = split(col("text"), " ")
+    val tok = Tokens.words(col("text"))
     docs
       .filter(size(tok) >= 3 + WinnowWindow - 1)
       .select(col("doc_id"),
@@ -444,7 +461,7 @@ object DedupQueries extends QueryModule {
     * array — shingle-keyed and doc-keyed shuffles only, never doc×doc.
     */
   def substringDedup(docs: DataFrame, minRun: Int): DataFrame = {
-    val tok = split(col("text"), " ")
+    val tok = Tokens.words(col("text"))
     val grams = docs.select(col("doc_id"),
         posexplode(graft.functions.ShingleHashes
           .positionalShingleHashes(col("text"), minRun)).as(Seq("p0", "h")))
@@ -485,7 +502,7 @@ object DedupQueries extends QueryModule {
     // MinHash-LSH near-dup pairs (no oracle — hash-dependent candidates;
     // ScalaTest asserts recall vs q34's exact pairs).
     "q36_minhash_pairs" -> { (s, dir) =>
-      minhashPairs(Tables.t(s, dir, "documents"), 0.6)
+      minhashPairs(Tables.t(s, dir, "documents"), NearDupJaccard)
     },
 
     // Substring-grain duplicate-RUN removal over the fixture corpus with
@@ -525,14 +542,9 @@ object DedupQueries extends QueryModule {
     // are both near-dup-density-sized.
     "q250_minhash_recall" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val exact = TextQueries
-        .prefixJaccardPairs(d, 0.6, presentationSort = false)
+      val exact = nearDupPairs(docs)
         .select(col("source"), col("a_id"), col("b_id"))
-      val lsh = minhashPairs(docs, 0.6)
+      val lsh = minhashPairs(docs, NearDupJaccard)
         .select(col("source"), col("a_id"), col("b_id"))
       val caught = exact.join(lsh.withColumn("hit", lit(1)),
         Seq("source", "a_id", "b_id"), "left")
@@ -568,12 +580,7 @@ object DedupQueries extends QueryModule {
     // near-dup-density / corpus-sized — never all-pairs.
     "q266_simhash_contract" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val exact = TextQueries
-        .prefixJaccardPairs(d, 0.6, presentationSort = false)
+      val exact = nearDupPairs(docs)
         .select(col("source"), col("a_id"), col("b_id"))
         .transform(graft.Checkpoints.ckpt)
       val sh = simhash(docs).transform(graft.Checkpoints.ckpt)
@@ -612,13 +619,7 @@ object DedupQueries extends QueryModule {
     // its component's minimum doc_id; is_canonical marks the survivor per
     // cluster. Oracle: recursive-CTE reachability fixpoint in DuckDB.
     "q71_dedup_clusters" -> { (s, dir) =>
-      val d = Tables.t(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
-      connectedComponents(pairs)
+      nearDupClusters(Tables.t(s, dir, "documents"))
         .select(col("id").as("doc_id"), col("label").as("cluster_id"),
           (col("id") === col("label")).as("is_canonical"))
         .orderBy("doc_id")
@@ -634,13 +635,7 @@ object DedupQueries extends QueryModule {
     // per-cluster state is one row.
     "q122_dedup_survivors" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
-      val cc = connectedComponents(pairs)
+      val cc = nearDupClusters(docs)
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("cluster_id"))
@@ -665,13 +660,7 @@ object DedupQueries extends QueryModule {
     // near-dup-bounded, never corpus-sized.
     "q219_golden_record" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
-      val cc = connectedComponents(pairs)
+      val cc = nearDupClusters(docs)
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       val mem = cc.join(docs.select(col("doc_id"), col("source"),
         col("lang"), col("n_chars")), "doc_id")
@@ -714,9 +703,9 @@ object DedupQueries extends QueryModule {
     // doc-keyed join, sources-sized rollup.
     "q268_winnow_contract" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-        .filter(size(split(col("text"), " ")) >= 10)
+        .filter(size(Tokens.words(col("text"))) >= 10)
       val derived = docs.select(col("doc_id"),
-        array_join(slice(split(col("text"), " "), 3, 1000000), " ")
+        array_join(slice(Tokens.words(col("text")), 3, 1000000), " ")
           .as("text"))
       val fa = winnowFingerprints(docs)
         .select(col("doc_id"), array_sort(col("fingerprints")).as("fa"))
@@ -758,7 +747,7 @@ object DedupQueries extends QueryModule {
     // multiplicity (bounded); singleton groups pass through unranked in
     // the same pass.
     "q125_prefix_dedup" -> { (s, dir) =>
-      val pfx = concat_ws(" ", slice(split(col("text"), " "), 1, 20))
+      val pfx = concat_ws(" ", slice(Tokens.words(col("text")), 1, 20))
       val byPfx = org.apache.spark.sql.expressions.Window
         .partitionBy(col("pfx"))
       val w = byPfx.orderBy(col("n_chars").desc, col("doc_id").asc)
@@ -783,12 +772,10 @@ object DedupQueries extends QueryModule {
     // sits on a 1e-6 half boundary, so both engines agree bit-for-bit.
     "q130_source_admission" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
+      val d = Tokens.tokenSets(docs)
       val pairs = probeIndexJaccardPairs(
         d.filter(col("source") === "src0").drop("source"),
-        d.filter(col("source") =!= "src0").drop("source"), 0.6)
+        d.filter(col("source") =!= "src0").drop("source"), NearDupJaccard)
       pairs
         .join(docs.select(col("doc_id").as("b_id"), col("source")), "b_id")
         .groupBy(col("source"))
@@ -811,10 +798,7 @@ object DedupQueries extends QueryModule {
     // predicates before the verify join — the q34 discipline, one
     // candidate distinct, exact sorted-intersect verify.
     "q148_containment_pairs" -> { (s, dir) =>
-      val d = Tables.t(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
+      val d = Tokens.tokenSets(Tables.t(s, dir, "documents"))
       containmentPairs(d, 0.8)
         .select(col("source"), col("a_id"), col("b_id"),
           round(col("containment"), 4).as("containment"))
@@ -832,11 +816,7 @@ object DedupQueries extends QueryModule {
     // pair-sized edge list, and the report is #sources rows.
     "q153_source_dup_rate" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
+      val pairs = nearDupPairs(docs)
       val dup = pairs
         .select(col("source"),
           explode(array(col("a_id"), col("b_id"))).as("doc_id"))
@@ -864,11 +844,7 @@ object DedupQueries extends QueryModule {
     // can disagree.
     "q156_dedup_yield_curve" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
+      val pairs = nearDupPairs(docs)
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       pairs
         .withColumn("threshold", explode(array(
@@ -898,9 +874,7 @@ object DedupQueries extends QueryModule {
     // percentile (cross-engine exact: ids are exact longs).
     "q165_incremental_dedup" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
+      val d = Tokens.tokenSets(docs)
       val cut = docs.agg(
         expr("percentile(doc_id, 0.8)").as("cut_id"))
       val dd = d.crossJoin(broadcast(cut))
@@ -914,7 +888,7 @@ object DedupQueries extends QueryModule {
       val oldDocs = dd.filter(col("doc_id").cast("double") <= col("cut_id"))
         .drop("cut_id")
       val hits = probeIndexJaccardPairs(
-        newDocs.drop("source"), oldDocs.drop("source"), 0.6)
+        newDocs.drop("source"), oldDocs.drop("source"), NearDupJaccard)
         .groupBy(col("a_id").as("doc_id"))
         .agg(count(lit(1)).as("n_matches"),
           max(round(col("jaccard"), 4)).as("best_jaccard"))
@@ -964,11 +938,11 @@ object DedupQueries extends QueryModule {
       graft.etl.Snapshot.commit(DedupStore.bandPostings(oldDocs), root)
       val standing = graft.etl.Snapshot.read(s, root)
       def toks(d: DataFrame) = d.select(col("doc_id"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
+        Tokens.hashedSet(Tokens.words(col("text"))).as("tok"))
       val dumpPost = DedupStore.bandPostings(newDocs).transform(graft.Checkpoints.ckpt)
       val drops = DedupStore.dropsAgainstIndex(dumpPost, standing,
-        toks(newDocs), toks(oldDocs), 0.6).transform(graft.Checkpoints.ckpt)
+        toks(newDocs), toks(oldDocs), NearDupJaccard)
+        .transform(graft.Checkpoints.ckpt)
       graft.etl.Snapshot.commitDelta(
         dumpPost.join(drops.select(col("doc_id")), Seq("doc_id"),
           "left_anti"),
@@ -993,7 +967,8 @@ object DedupQueries extends QueryModule {
         .transform(graft.Checkpoints.ckpt)
       graft.etl.Snapshot.destroy(s, root)
       // the exact decision — the contract baseline only
-      val exact = probeIndexJaccardPairs(toks(newDocs), toks(oldDocs), 0.6)
+      val exact =
+        probeIndexJaccardPairs(toks(newDocs), toks(oldDocs), NearDupJaccard)
         .groupBy(col("a_id").as("doc_id")).agg(count(lit(1)).as("nm"))
       newDocs.select(col("doc_id"), col("source"))
         .join(drops.select(col("doc_id"), lit(1).as("lsh")),
@@ -1028,12 +1003,7 @@ object DedupQueries extends QueryModule {
     // hash; the split itself adds nothing corpus-quadratic.
     "q169_leakage_split" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val d = docs.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      val pairs =
-        TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
-      val cc = connectedComponents(pairs)
+      val cc = nearDupClusters(docs)
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       val key = coalesce(col("cluster_id"), col("doc_id"))
       val bucket = conv(substring(

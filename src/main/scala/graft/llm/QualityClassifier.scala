@@ -78,8 +78,6 @@ object QualityClassifier extends QueryModule {
                              w: Array[Double], mu: Array[Double],
                              sd: Array[Double])
 
-  private def stops = Seq("the", "a", "of", "and", "to")
-
   /** Mann-Whitney tallies → AUC row(s), optionally grouped. Expects
     * columns (n_pos, n_neg, neg_offset, local_neg_below) per distinct
     * score. The pair products ride DECIMAL(38,0) — each long factor
@@ -122,12 +120,7 @@ object QualityClassifier extends QueryModule {
     */
   private def leakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.t(s, dir, "documents")
-    val d = docs.select(col("doc_id"), col("source"),
-      array_sort(array_distinct(transform(split(col("text"), " "),
-        (t: Column) => xxhash64(t)))).as("tok"))
-    val pairs =
-      TextQueries.prefixJaccardPairs(d, 0.6, presentationSort = false)
-    val cc = DedupQueries.connectedComponents(pairs)
+    val cc = DedupQueries.nearDupClusters(docs)
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
     val key = coalesce(col("cluster_id"), col("doc_id"))
     val bucket = conv(substring(
@@ -157,15 +150,14 @@ object QualityClassifier extends QueryModule {
     * tuning: gate thresholds are per-corpus parameters). */
   private def featurize(docs: DataFrame, mlLo: Double)
       : (DataFrame, DataFrame) = {
-    val tok = split(col("text"), " ")
+    val tok = Tokens.words(col("text"))
     val n = size(tok)
     val sumLen = aggregate(tok, lit(0L),
       (acc: Column, t: Column) => acc + length(t).cast("long"))
     val ml = sumLen.cast("double") / n.cast("double")
     val af = size(filter(tok, (t: Column) => t.rlike("[a-z]")))
       .cast("double") / n.cast("double")
-    val sf = size(filter(tok, (t: Column) => t.isInCollection(stops)))
-      .cast("double") / n.cast("double")
+    val sf = Tokens.gate(tok).stopRatio
     val tfr = graft.functions.NGramStats.ngramStats(col("text"), 1)
       .getField("top").cast("double") / n.cast("double")
     val y = when(n.between(50, 100000) && ml.between(mlLo, 10.0) &&

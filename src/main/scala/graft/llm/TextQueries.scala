@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 object TextQueries extends QueryModule {
   import Fns.{davgSql, davg}
 
-  private val Stopwords = Seq("the", "a", "of", "and", "to")
-
   /** Exact Jaccard near-dup pairs via df-ordered prefix filtering
     * (the all-pairs similarity-join technique of Chaudhuri et al. 2006 /
     * Bayardo et al. 2007). Input: `(doc_id, source, tok)` where `tok` is the
@@ -450,7 +448,7 @@ object TextQueries extends QueryModule {
     "q78_edit_distance" -> { (s, dir) =>
       val p = Tables.t(s, dir, "part").select(
         col("p_partkey"), col("p_brand"),
-        array_join(slice(split(col("p_name"), " "), 1, 2), " ").as("blk"),
+        array_join(slice(Tokens.words(col("p_name")), 1, 2), " ").as("blk"),
         col("p_name"))
       val a = p.select(col("p_brand"), col("blk"),
         col("p_partkey").as("a_key"), col("p_name").as("a_name"))
@@ -492,7 +490,7 @@ object TextQueries extends QueryModule {
     "q290_source_gini" -> { (s, dir) =>
       val d = Tables.t(s, dir, "documents")
         .select(col("source"), col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("x"))
+          size(Tokens.words(col("text"))).cast("long").as("x"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"))
         .orderBy(col("x").asc, col("doc_id").asc)
@@ -516,7 +514,7 @@ object TextQueries extends QueryModule {
         .agg(
           count(lit(1)).as("n_docs"),
           davg(col("n_chars").cast("double")).as("avg_chars"),
-          sum(size(split(col("text"), " ")).cast("long")).as("total_tokens"),
+          sum(size(Tokens.words(col("text"))).cast("long")).as("total_tokens"),
           max(col("n_chars")).as("max_chars"),
           min(col("n_chars")).as("min_chars"))
         .orderBy("lang", "source")
@@ -525,20 +523,16 @@ object TextQueries extends QueryModule {
     // Per-document quality scoring: token stats, stopword ratio, lexical
     // diversity. Ratios are exact-int divisions -> deterministic doubles.
     "q33_quality_score" -> { (s, dir) =>
-      val tok  = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Stopwords))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
+      val tok = Tokens.words(col("text"))
+      val g = Tokens.gate(tok)
       Tables.t(s, dir, "documents").select(
         col("doc_id"),
         col("lang"),
         size(tok).cast("long").as("n_tokens"),
-        (col("n_chars").cast("double") / nTok).as("chars_per_token"),
-        (nStop / nTok).as("stopword_ratio"),
-        (nDist / nTok).as("distinct_ratio"),
-        (nDist / nTok * lit(0.5) + (lit(1.0) - nStop / nTok) * lit(0.5))
-          .as("quality"))
+        (col("n_chars").cast("double") / g.nTok).as("chars_per_token"),
+        g.stopRatio.as("stopword_ratio"),
+        g.distinctRatio.as("distinct_ratio"),
+        g.quality.as("quality"))
         .orderBy("doc_id")
     },
 
@@ -554,13 +548,8 @@ object TextQueries extends QueryModule {
     // 10-key aggregation; means ride exact-decimal sums over identical
     // doubles (p is exact-integer-ratio arithmetic in both engines).
     "q281_calibration_table" -> { (s, dir) =>
-      val tok  = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Stopwords))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
-      val p = nDist / nTok * lit(0.5) +
-        (lit(1.0) - nStop / nTok) * lit(0.5)
+      val tok = Tokens.words(col("text"))
+      val p = Tokens.gate(tok).quality
       Tables.t(s, dir, "documents")
         .select(p.as("p"),
           when(size(tok) >= 56, 1L).otherwise(0L).as("y"))
@@ -592,16 +581,10 @@ object TextQueries extends QueryModule {
     // One scan labels row-local, one aggregation; p_o/p_e/κ are a few
     // IEEE ops on exact longs, identical in both engines.
     "q282_cohens_kappa" -> { (s, dir) =>
-      val tok  = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Stopwords))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
-      val q = nDist / nTok * lit(0.5) +
-        (lit(1.0) - nStop / nTok) * lit(0.5)
+      val g = Tokens.gate(Tokens.words(col("text")))
       val m = Tables.t(s, dir, "documents")
-        .select(when(q >= 0.72, 1L).otherwise(0L).as("a"),
-          when(nStop / nTok <= 0.06, 1L).otherwise(0L).as("b"))
+        .select(when(g.quality >= 0.72, 1L).otherwise(0L).as("a"),
+          when(g.stopRatio <= 0.06, 1L).otherwise(0L).as("b"))
         .agg(count(lit(1)).as("n"),
           sum(col("a") * col("b")).as("n11"),
           sum(col("a") * (lit(1L) - col("b"))).as("n10"),
@@ -636,7 +619,7 @@ object TextQueries extends QueryModule {
     // in both engines (LN bit-compat as in q214's Adamic-Adar).
     "q293_tfidf_cosine" -> { (s, dir) =>
       val docs = Tables.t(s, dir, "documents")
-      val ts = split(col("text"), " ")
+      val ts = Tokens.words(col("text"))
       val post = docs
         .filter(size(ts) >= 5)
         .select(col("doc_id"),
@@ -688,12 +671,9 @@ object TextQueries extends QueryModule {
     },
 
     // Document fingerprint: canonical form (lowercase, collapsed whitespace)
-    // -> md5; short prefix as a shard/bucket key. Whitespace as the
-    // explicit [ \t\n\f\r] class — \s diverges on U+000B between Java
-    // regex and RE2.
+    // -> md5; short prefix as a shard/bucket key.
     "q35_fingerprint" -> { (s, dir) =>
-      val normd =
-        lower(trim(regexp_replace(col("text"), "[ \\t\\n\\f\\r]+", " ")))
+      val normd = lower(Tokens.collapse(col("text")))
       Tables.t(s, dir, "documents").select(
         col("doc_id"),
         md5(normd.cast("binary")).as("fingerprint"),
@@ -708,18 +688,15 @@ object TextQueries extends QueryModule {
     // 64-bit hashes so the verify step can use the fused sorted-intersect
     // expression. The probabilistic MinHash/LSH variant is q36.
     "q34_jaccard_pairs" -> { (s, dir) =>
-      val d = Tables.t(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      prefixJaccardPairs(d, 0.6)
+      prefixJaccardPairs(Tokens.tokenSets(Tables.t(s, dir, "documents")),
+        DedupQueries.NearDupJaccard)
     },
 
     // Word count via explode — the Generator/UDTF surface (SURVEY.md §2.2):
     // built-in generators subsume custom UDTFs for tokenization.
     "q53_token_freq" -> { (s, dir) =>
       Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("token"))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
         .agg(count(lit(1)).as("n"))
         .orderBy("source", "token")
@@ -730,7 +707,7 @@ object TextQueries extends QueryModule {
     // count action).
     "q51_tfidf" -> { (s, dir) =>
       val tok = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .select(col("doc_id"), explode(Tokens.words(col("text"))).as("token"))
       val tf = tok.groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf"))
       val df = tok.groupBy(col("token"))
@@ -802,7 +779,7 @@ object TextQueries extends QueryModule {
     // char-n-gram variant is q72; the mechanism here (profile score
     // -> argmax, one scan, no shuffle) is identical.
     "q42_langid" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       def score(words: Seq[String]): Column =
         size(filter(tok, (t: Column) => t.isInCollection(words))).cast("long")
       val sEn = score(Seq("the", "a", "of"))
@@ -839,7 +816,7 @@ object TextQueries extends QueryModule {
     // mirrors the standard collocation support floor.
     "q102_bigram_pmi" -> { (s, dir) =>
       val pairs = Tables.t(s, dir, "documents")
-        .select(split(col("text"), " ").as("tok"))
+        .select(Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(explode(expr(
           "transform(sequence(1, size(tok) - 1), " +
@@ -848,7 +825,7 @@ object TextQueries extends QueryModule {
         .select(col("bg.x").as("x"), col("bg.y").as("y"))
       val cxy = pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
       val uni = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("t"))
+        .select(explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c"))
       val n1 = uni.agg(sum(col("c")).as("n1"))
       val n2 = cxy.agg(sum(col("c_xy")).as("n2"))
@@ -877,7 +854,7 @@ object TextQueries extends QueryModule {
     // fold).
     "q117_window_pmi" -> { (s, dir) =>
       val pairs = Tables.t(s, dir, "documents")
-        .select(split(col("text"), " ").as("tok"))
+        .select(Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(explode(expr(
           "flatten(transform(sequence(1, size(tok) - 1), " +
@@ -887,7 +864,7 @@ object TextQueries extends QueryModule {
         .select(col("pr.x").as("x"), col("pr.y").as("y"))
       val cxy = pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
       val uni = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("t"))
+        .select(explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c"))
       val n1 = uni.agg(sum(col("c")).as("n1"))
       val n2 = cxy.agg(sum(col("c_xy")).as("n2"))
@@ -922,7 +899,7 @@ object TextQueries extends QueryModule {
     // `+ 0.0` fold is applied on both sides anyway.
     "q119_bigram_lm" -> { (s, dir) =>
       val bg = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tok"))
+        .select(col("doc_id"), Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(tok) - 1), " +
@@ -930,7 +907,7 @@ object TextQueries extends QueryModule {
             "'y', element_at(tok, i + 1)))")).as("bg"))
         .select(col("doc_id"), col("bg.x").as("x"), col("bg.y").as("y"))
       val uni = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("t"))
+        .select(explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c"))
       val v = uni.agg(count(lit(1)).as("v"))
       val model = bg.groupBy(col("x"), col("y"))
@@ -964,7 +941,7 @@ object TextQueries extends QueryModule {
         "|[ \\t\\n\\f\\r]+"
       val pieces = size(regexp_extract_all(col("text"), lit(pat), lit(0)))
         .cast("long")
-      val words = size(split(col("text"), " ")).cast("long")
+      val words = size(Tokens.words(col("text"))).cast("long")
       Tables.t(s, dir, "documents")
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -990,7 +967,7 @@ object TextQueries extends QueryModule {
     // rollup; ratios are exact-long IEEE divisions.
     "q128_vocab_growth" -> { (s, dir) =>
       vocabGrowthOf(Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t")))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t")))
     },
 
     // q128's census on the Zipf-regenerated corpus ([[zipfTokArray]]):
@@ -1024,7 +1001,7 @@ object TextQueries extends QueryModule {
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val giga = lit(1000000000L).cast("decimal(10,0)")
       val idf = docs.select(explode(array_distinct(transform(
-          split(col("text"), " "), (t: Column) => xxhash64(t)))).as("h"))
+          Tokens.words(col("text")), (t: Column) => xxhash64(t)))).as("h"))
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(n))
         .select(col("h"),
@@ -1046,7 +1023,7 @@ object TextQueries extends QueryModule {
         .select(col("h"), col("ip"),
           (col("hi9") * lit(1000000000L) + col("low9")).as("fr"))
       val wtok = docs.select(col("doc_id"),
-          explode(array_distinct(transform(split(col("text"), " "),
+          explode(array_distinct(transform(Tokens.words(col("text")),
             (t: Column) => xxhash64(t)))).as("h"))
         .join(idf, "h")
         .groupBy(col("doc_id"))
@@ -1054,10 +1031,7 @@ object TextQueries extends QueryModule {
           .as("wt"))
         .withColumn("w", graft.functions.SortedWeightedIntersectSum
           .weightedIntersectSum(col("wt"), col("wt")))
-      val d = docs.select(col("doc_id"), col("source"),
-        array_sort(array_distinct(transform(split(col("text"), " "),
-          (t: Column) => xxhash64(t)))).as("tok"))
-      prefixJaccardPairs(d, 0.6, presentationSort = false)
+      DedupQueries.nearDupPairs(docs)
         .select(col("source"), col("a_id"), col("b_id"))
         .join(wtok.select(col("doc_id").as("a_id"), col("wt").as("a_wt"),
           col("w").as("a_w")), "a_id")
@@ -1081,7 +1055,7 @@ object TextQueries extends QueryModule {
     // on identical doubles in both engines.
     "q132_zipf_slope" -> { (s, dir) =>
       zipfSlopeOf(Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t")))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t")))
     },
 
     // q132 on the Zipf-regenerated corpus: the regression must recover
@@ -1101,7 +1075,7 @@ object TextQueries extends QueryModule {
     // only the emitted score is grid-rounded.
     "q141_doc_keywords" -> { (s, dir) =>
       val tok = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .select(col("doc_id"), explode(Tokens.words(col("text"))).as("token"))
       val tf = tok.groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf"))
       val df = tok.groupBy(col("token"))
@@ -1134,7 +1108,7 @@ object TextQueries extends QueryModule {
     // summands reduce through the exact-decimal sum.
     "q142_conditional_entropy" -> { (s, dir) =>
       val pairs = Tables.t(s, dir, "documents")
-        .select(col("source"), split(col("text"), " ").as("tok"))
+        .select(col("source"), Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(col("source"), explode(expr(
           "transform(sequence(1, size(tok) - 1), " +
@@ -1173,7 +1147,7 @@ object TextQueries extends QueryModule {
       val mean = col("tf").cast("double") / df
       val fano = (col("s2").cast("double") / df - mean * mean) / mean
       Tables.t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+        .select(col("doc_id"), explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("t"), col("doc_id")).agg(count(lit(1)).as("c"))
         .groupBy(col("t"))
         .agg(count(lit(1)).as("df"), sum(col("c")).as("tf"),
@@ -1197,18 +1171,12 @@ object TextQueries extends QueryModule {
     // green), so ranks agree exactly; the division of exact longs is one
     // IEEE op.
     "q150_score_calibrate" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val nTok = size(tok).cast("double")
-      val nStop = size(filter(tok, (t: Column) =>
-        t.isInCollection(Stopwords))).cast("double")
-      val nDist = size(array_distinct(tok)).cast("double")
+      val quality = Tokens.gate(Tokens.words(col("text"))).quality
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"))
         .orderBy(col("quality"), col("doc_id"))
       Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          (nDist / nTok * lit(0.5) + (lit(1.0) - nStop / nTok) * lit(0.5))
-            .as("quality"))
+        .select(col("doc_id"), col("source"), quality.as("quality"))
         .withColumn("calibrated", percent_rank().over(w))
         .select(col("doc_id"), col("source"), col("quality"),
           col("calibrated"))
@@ -1224,15 +1192,9 @@ object TextQueries extends QueryModule {
     // both engines interpolate identically over bit-identical score
     // doubles); #sources rows out.
     "q158_source_quality_profile" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
-      val nTok2 = size(tok).cast("double")
-      val nStop2 = size(filter(tok, (t: Column) =>
-        t.isInCollection(Stopwords))).cast("double")
-      val nDist2 = size(array_distinct(tok)).cast("double")
+      val quality = Tokens.gate(Tokens.words(col("text"))).quality
       Tables.t(s, dir, "documents")
-        .select(col("source"),
-          (nDist2 / nTok2 * lit(0.5) + (lit(1.0) - nStop2 / nTok2) *
-            lit(0.5)).as("quality"))
+        .select(col("source"), quality.as("quality"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           round(expr("percentile(quality, 0.25)"), 4).as("q25"),
@@ -1253,7 +1215,7 @@ object TextQueries extends QueryModule {
     // one #langs²-key aggregation; shares as a window over those
     // matrix-sized rows.
     "q163_langid_confusion" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       def score(words: Seq[String]): Column =
         size(filter(tok, (t: Column) => t.isInCollection(words))).cast("long")
       val sEn = score(Seq("the", "a", "of"))
@@ -1299,7 +1261,7 @@ object TextQueries extends QueryModule {
     // F1/F2, one double expression identical in both engines.
     "q276_chao1_vocab" -> { (s, dir) =>
       chao1Of(Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t")))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t")))
     },
 
     // q276 on the Zipf-regenerated corpus: F1/F2 are large and the
@@ -1313,7 +1275,7 @@ object TextQueries extends QueryModule {
 
     "q168_hapax_census" -> { (s, dir) =>
       hapaxCensusOf(Tables.t(s, dir, "documents")
-        .select(col("source"), split(col("text"), " ").as("tok")))
+        .select(col("source"), Tokens.words(col("text")).as("tok")))
     },
 
     // q168 on the Zipf-regenerated corpus: with ~500 unigram types the
@@ -1341,7 +1303,7 @@ object TextQueries extends QueryModule {
     "q180_feature_hash" -> { (s, dir) =>
       val nd = 16
       val tf = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+        .select(col("doc_id"), explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
       val signs = tf.select(col("t")).distinct()
         .withColumn("h", md5(col("t").cast("binary")))
@@ -1376,7 +1338,7 @@ object TextQueries extends QueryModule {
     // q102's engine-identical rounded PMI.
     "q183_word_communities" -> { (s, dir) =>
       val pairs = Tables.t(s, dir, "documents")
-        .select(split(col("text"), " ").as("tok"))
+        .select(Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(explode(expr(
           "transform(sequence(1, size(tok) - 1), " +
@@ -1386,7 +1348,7 @@ object TextQueries extends QueryModule {
       val cxy = pairs.groupBy(col("x"), col("y"))
         .agg(count(lit(1)).as("c_xy"))
       val uni = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("t"))
+        .select(explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c"))
       val n1 = uni.agg(sum(col("c")).as("n1"))
       val n2 = cxy.agg(sum(col("c_xy")).as("n2"))
@@ -1423,7 +1385,7 @@ object TextQueries extends QueryModule {
     "q197_heavy_hitters" -> { (s, dir) =>
       import graft.functions.MisraGriesSketch.misraGries
       val toks = Tables.t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok"))
+        .select(explode(Tokens.words(col("text"))).as("tok"))
       val cand = toks.agg(misraGries(col("tok"), 256).as("mg"))
         .select(explode(map_keys(col("mg"))).as("tok"))
       val n = toks.agg(count(lit(1)).as("n_tok"))
@@ -1451,7 +1413,7 @@ object TextQueries extends QueryModule {
     "q217_code_switch" -> { (s, dir) =>
       val win = 10
       val chunks = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("tok"))
+        .select(col("doc_id"), Tokens.words(col("text")).as("tok"))
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, (size(tok) - 1) div $win), " +
             s"i -> array_join(slice(tok, i * $win + 1, $win), ' '))"))
@@ -1502,7 +1464,7 @@ object TextQueries extends QueryModule {
     // projection: zero shuffles except the output sort; the formula is
     // pure double arithmetic on exact ints, identical in both engines.
     "q231_readability" -> { (s, dir) =>
-      val words = size(split(col("text"), " ")).cast("long")
+      val words = size(Tokens.words(col("text"))).cast("long")
       val sents = greatest(lit(1L),
         size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
           .cast("long"))
@@ -1568,7 +1530,7 @@ object TextQueries extends QueryModule {
     "q256_unigram_ce" -> { (s, dir) =>
       val dt = Tables.t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
-          explode(split(col("text"), " ")).as("w"))
+          explode(Tokens.words(col("text"))).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("doc_id"), col("source"), col("w"))
         .agg(count(lit(1)).as("c"))
@@ -1624,7 +1586,7 @@ object TextQueries extends QueryModule {
           .cast("long") % B
       val bg = Tables.t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
-          split(col("text"), " ").as("tok"))
+          Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(col("doc_id"), col("source"), explode(expr(
           "transform(sequence(1, size(tok) - 1), " +
@@ -1635,7 +1597,7 @@ object TextQueries extends QueryModule {
           bucket(col("g.x")).as("bx"), bucket(col("g.y")).as("by"))
       val uni = Tables.t(s, dir, "documents")
         .filter(isT)
-        .select(explode(split(col("text"), " ")).as("t"))
+        .select(explode(Tokens.words(col("text"))).as("t"))
         .select(bucket(col("t")).as("b1"))
         .groupBy(col("b1")).agg(count(lit(1)).as("c1"))
       val big = bg.filter(isT).groupBy(col("b2"))
@@ -1779,7 +1741,7 @@ object TextQueries extends QueryModule {
       val tgt = Seq("src0", "src1", "src2", "src3")
       val isT = col("source").isin(tgt: _*)
       val counts = Tables.t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("t"))
+        .select(col("source"), explode(Tokens.words(col("text"))).as("t"))
         .filter(length(col("t")) > 0)
         .groupBy(col("t"))
         .agg(sum(when(isT, 1L).otherwise(0L)).as("a"),
@@ -1826,7 +1788,7 @@ object TextQueries extends QueryModule {
           .cast("long") % B
       val grams = Tables.t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
-          split(col("text"), " ").as("tok"))
+          Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 3)
         .select(col("doc_id"), col("source"), explode(expr(
           "transform(sequence(1, size(tok) - 2), " +
@@ -1841,11 +1803,11 @@ object TextQueries extends QueryModule {
           bucket(col("g.y")).as("by"), bucket(col("g.z")).as("bz"))
       val docs = Tables.t(s, dir, "documents")
       val uni = docs.filter(isT)
-        .select(explode(split(col("text"), " ")).as("t"))
+        .select(explode(Tokens.words(col("text"))).as("t"))
         .select(bucket(col("t")).as("b1"))
         .groupBy(col("b1")).agg(count(lit(1)).as("c1"))
       val bi = docs.filter(isT)
-        .select(split(col("text"), " ").as("tok"))
+        .select(Tokens.words(col("text")).as("tok"))
         .filter(size(col("tok")) >= 2)
         .select(explode(expr(
           "transform(sequence(1, size(tok) - 1), " +

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,11 +33,6 @@ object ZipfContracts extends QueryModule {
       .select(col("doc_id"), col("source"),
         array_join(TextQueries.zipfFamilyTokArray, " ").as("text"))
 
-  private def hashedTok(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      array_sort(array_distinct(transform(split(col("text"), " "),
-        (t: Column) => xxhash64(t)))).as("tok"))
-
   override def queries
       : Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -49,10 +44,9 @@ object ZipfContracts extends QueryModule {
     // bound 0.8 (the production LSH contract), under the 0.867 floor.
     "q313_minhash_recall_zipf" -> { (s, dir) =>
       val zdocs = familyDocs(s, dir).transform(graft.Checkpoints.ckpt)
-      val exact = TextQueries
-        .prefixJaccardPairs(hashedTok(zdocs), 0.6, presentationSort = false)
+      val exact = DedupQueries.nearDupPairs(zdocs)
         .select(col("source"), col("a_id"), col("b_id"))
-      val lsh = DedupQueries.minhashPairs(zdocs, 0.6)
+      val lsh = DedupQueries.minhashPairs(zdocs, DedupQueries.NearDupJaccard)
         .select(col("source"), col("a_id"), col("b_id"))
       val caught = exact.join(lsh.withColumn("hit", lit(1)),
         Seq("source", "a_id", "b_id"), "left")
@@ -78,8 +72,7 @@ object ZipfContracts extends QueryModule {
     // Bounds from the floors: dup mean ≤ 15, separation ≥ 7.
     "q314_simhash_contract_zipf" -> { (s, dir) =>
       val zdocs = familyDocs(s, dir).transform(graft.Checkpoints.ckpt)
-      val exact = TextQueries
-        .prefixJaccardPairs(hashedTok(zdocs), 0.6, presentationSort = false)
+      val exact = DedupQueries.nearDupPairs(zdocs)
         .select(col("source"), col("a_id"), col("b_id"))
         .transform(graft.Checkpoints.ckpt)
       val sh = DedupQueries.simhash(zdocs).transform(graft.Checkpoints.ckpt)
@@ -129,7 +122,7 @@ object ZipfContracts extends QueryModule {
     "q315_ann_recall_zipf" -> { (s, dir) =>
       val zdocs = familyDocs(s, dir)
       val tf = zdocs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+        .select(col("doc_id"), explode(Tokens.words(col("text"))).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
       val signs = tf.select(col("t")).distinct()
         .withColumn("h", md5(col("t").cast("binary")))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Fns, QueryModule, Tables}
+import graft.llm.Tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object ScalarQueries extends QueryModule {
         substring(col("p_name"), 1, 5).as("name_pfx"),
         concat_ws("-", col("p_brand"), col("p_type")).as("brand_type"),
         regexp_replace(col("p_name"), "[aeiou]", "").as("name_novowels"),
-        element_at(split(col("p_name"), " "), 1).as("first_word"),
+        element_at(Tokens.words(col("p_name")), 1).as("first_word"),
         trim(col("p_name")).as("name_trim"))
         .orderBy("p_partkey")
     },
@@ -79,7 +80,7 @@ object ScalarQueries extends QueryModule {
 
     // Array / higher-order functions over tokenized documents.
     "q26_array_funcs" -> { (s, dir) =>
-      val tok = split(col("text"), " ")
+      val tok = Tokens.words(col("text"))
       Tables.t(s, dir, "documents").select(
         col("doc_id"),
         size(tok).cast("long").as("n_tokens"),

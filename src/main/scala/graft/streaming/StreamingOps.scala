@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.llm.Tokens
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, Trigger}
@@ -421,26 +422,17 @@ object StreamingOps {
     */
   def corpusPrepStream(docs: DataFrame, chunkSize: Int = 50,
                        stride: Int = 40): DataFrame = {
-    val stripped  = regexp_replace(col("text"), "<[^>]*>", " ")
-    val collapsed = trim(regexp_replace(stripped, "[ \\t\\n\\f\\r]+", " "))
     val cleaned = docs.select(col("doc_id"), col("ts"),
-      lower(collapsed).as("clean_text"))
-    val tok   = split(col("clean_text"), " ")
-    val nTok  = size(tok).cast("double")
-    val nStop = size(filter(tok, (t: Column) =>
-      t.isInCollection(Seq("the", "a", "of", "and", "to")))).cast("double")
-    val nDist = size(array_distinct(tok)).cast("double")
-    val quality = nDist / nTok * lit(0.5) +
-      (lit(1.0) - nStop / nTok) * lit(0.5)
-    val ctok = split(col("clean_text"), " ")
+      Tokens.clean(col("text")).as("clean_text"))
+    val tok = Tokens.words(col("clean_text"))
     cleaned
-      .filter(size(tok) >= 10 && quality >= 0.6)
+      .filter(size(tok) >= 10 && Tokens.gate(tok).quality >= 0.6)
       .withColumn("h", md5(col("clean_text").cast("binary")))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("h")
-      .select(col("doc_id"), ctok.as("tok"),
+      .select(col("doc_id"), tok.as("tok"),
         posexplode(sequence(lit(1),
-          greatest(size(ctok) - (chunkSize - stride), lit(1)),
+          greatest(size(tok) - (chunkSize - stride), lit(1)),
           lit(stride))).as(Seq("chunk_id", "start")))
       .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         size(slice(col("tok"), col("start"), lit(chunkSize)))
@@ -626,12 +618,12 @@ object StreamingOps {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sparkB = batch.sparkSession
+        val spark = batch.sparkSession
         val batchIds = batch.select(col("doc_id")).distinct()
         if (graft.etl.Snapshot
-            .currentVersion(sparkB, s"$storeRoot/decisions").isDefined) {
+            .currentVersion(spark, s"$storeRoot/decisions").isDefined) {
           val prior = graft.etl.Snapshot
-            .read(sparkB, s"$storeRoot/decisions")
+            .read(spark, s"$storeRoot/decisions")
             .join(batchIds, Seq("doc_id"), "left_anti")
             .agg(max(col("doc_id")).as("mx")).head()
           val mnRow = batchIds.agg(min(col("doc_id")).as("mn")).head()
@@ -640,19 +632,17 @@ object StreamingOps {
             onOutOfOrder(mnRow.getLong(0), prior.getLong(0))
         }
         val toks = batch.select(col("doc_id"),
-          array_sort(array_distinct(transform(split(col("text"), " "),
-            (t: Column) => xxhash64(t)))).as("tok"))
+          Tokens.hashedSet(Tokens.words(col("text"))).as("tok"))
         val post = graft.llm.DedupStore.bandPostings(batch)
         graft.etl.Snapshot.commitDelta(post, s"$storeRoot/postings",
           "posting_id")
         graft.etl.Snapshot.commitDelta(toks, s"$storeRoot/toks", "doc_id")
         afterLand(batchId)
-        val spark = batch.sparkSession
         val drops = graft.llm.DedupStore.dropsAgainstSeen(
           post, toks,
           graft.etl.Snapshot.read(spark, s"$storeRoot/postings"),
           graft.etl.Snapshot.read(spark, s"$storeRoot/toks"), threshold)
-        val decisions = batch.select(col("doc_id")).distinct()
+        val decisions = batchIds
           .join(drops, Seq("doc_id"), "left")
           .select(col("doc_id"),
             col("n_matches").isNull.as("admitted"),

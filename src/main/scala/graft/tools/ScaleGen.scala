@@ -8,6 +8,7 @@
 package graft.tools
 
 import graft.{GraftSession, Tables}
+import graft.llm.Tokens
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object ScaleGen {
     rep("documents") { df =>
       df.select(off("doc_id").as("doc_id"),
         when(col("cp") === 0, col("text")).otherwise(
-          array_join(transform(split(col("text"), " "), (t: Column) =>
+          array_join(transform(Tokens.words(col("text")), (t: Column) =>
             when(pmod(xxhash64(t, col("cp")), lit(100L)) < 45,
               concat(t, lit("~"), col("cp"))).otherwise(t)), " "))
           .as("text"),

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,5 +74,48 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(live(outsideId), "pre-existing checkpoint must survive")
     assert(outside.count() == 2)
     Checkpoints.free(outside)
+  }
+
+  test("reliable mode: ckpt matches the local path, roll works, free is a no-op") {
+    val key = "spark.graft.checkpoint.reliable"
+    def file(df: DataFrame) =
+      df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.getCheckpointFile
+    def onDisk(df: DataFrame) =
+      file(df).exists(p => Files.isDirectory(Paths.get(new java.net.URI(p))))
+    val df = spark.range(0, 100).select((col("id") % 7).as("k"), col("id"))
+    val local = Checkpoints.ckpt(df)
+    assert(file(local).isEmpty, "precondition: the default is block-backed")
+    val localRows = local.collect().toSet
+    Checkpoints.free(local)
+    val dir = Files.createTempDirectory("graft-ckpt-")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val ck = Checkpoints.ckpt(df)
+      assert(onDisk(ck),
+        s"ckpt should write a reliable checkpoint under $dir, got ${file(ck)}")
+      assert(ck.collect().toSet == localRows)
+
+      var r = Checkpoints.ckpt(Seq(1L).toDF("v"))
+      (1 to 3).foreach { _ =>
+        r = Checkpoints.roll(r.select((col("v") + 1).as("v")), r)
+      }
+      assert(onDisk(r))
+      assert(r.as[Long].head() == 4L)
+
+      Checkpoints.free(ck)
+      assert(ck.collect().toSet == localRows)
+      assert(onDisk(ck))
+    } finally {
+      before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
+    }
   }
 }

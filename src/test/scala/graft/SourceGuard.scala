@@ -4,12 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source scans for the drift guards (`GraftSessionSpec`,
-  * `ParquetSchemaSpec`): where a call appears in code. */
+  * `ParquetSchemaSpec`, `llm.TokensSpec`): where a call appears in code. */
 object SourceGuard {
 
   /** `file:line` of every line under `roots` that contains `call` and is
     * not a comment line, skipping files named `exempt`. */
   def sites(roots: Seq[String], call: String, exempt: String): Seq[String] =
+    sitesWhere(roots, exempt)(_.contains(call))
+
+  /** `file:line` of every non-comment line under `roots` that `hit`
+    * accepts (given the trimmed line), skipping files named `exempt`. */
+  def sitesWhere(roots: Seq[String], exempt: String)
+                (hit: String => Boolean): Seq[String] =
     for {
       f <- roots.flatMap(scalaFiles)
       if f.getFileName.toString != exempt
@@ -17,7 +23,7 @@ object SourceGuard {
       code = line.trim
       // scaladoc and line comments show usage, they run nothing
       if !code.startsWith("*") && !code.startsWith("//")
-      if code.contains(call)
+      if hit(code)
     } yield s"$f:${i + 1}"
 
   private def scalaFiles(root: String): Seq[Path] = {

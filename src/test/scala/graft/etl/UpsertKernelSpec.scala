@@ -59,6 +59,9 @@ class UpsertKernelSpec extends AnyFunSuite {
     val src = frame((1L, "2024-01-01 00:00:00", "a"), (2L, "2024-01-09 23:00:00", "b"))
     val out = UpsertKernel.upsertWithStats(old, src, "id", "ts", asOf, 24)
     assert(out.count() == 2)
+    val plain = UpsertKernel.upsert(old, src, "id", "ts", asOf, 24)
+    assert(out.orderBy("id").collect().toSeq ==
+      plain.orderBy("id").collect().toSeq)
   }
 
   test("schema drift: a column ADDED by the delta null-fills old rows") {
