@@ -2,30 +2,17 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** CSV bulk ingest — `seed_from_remote_csv` (`pyopenetl/operations.py:486-513`)
-  * and the tar-of-CSVs flatfile loader (`operations.py:634-686`). The
-  * reference chunk-loops `pd.read_csv` (hardcoded 200k rows,
-  * `operations.py:495`) and materializes whole files in pandas
-  * (`operations.py:676`) — its scalability cliff. Spark's CSV source is
-  * splittable: one call, distributed scan, schema inference on a sample.
-  * Multi-file ingest (the tarball case) is the same call with a list of
-  * paths — a union scan, no driver-side loop.
+/** Dirty-CSV ingest — `seed_from_remote_csv`
+  * (`pyopenetl/operations.py:486-513`) and the tar-of-CSVs flatfile loader
+  * (`operations.py:634-686`). The reference chunk-loops `pd.read_csv`
+  * (hardcoded 200k rows, `operations.py:495`) and materializes whole files
+  * in pandas (`operations.py:676`) — its scalability cliff. Spark's CSV
+  * source is splittable: one call, distributed scan. A clean CSV table
+  * lands through [[Pipelines.flatfilePipeline]] (schema inferred on a
+  * sample by [[graft.sources.CsvSource]], committed through [[Snapshot]]);
+  * this object holds the quarantining read for files with malformed rows.
   */
 object CsvIngest {
-  def readCsv(spark: SparkSession, paths: String*): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(paths: _*)
-
-  /** Ingest = read + normalize + overwrite, mirroring
-    * create-table-then-append (`operations.py:679-680`), committed through
-    * the crash-atomic snapshot. */
-  def ingest(spark: SparkSession, dstPath: String, paths: String*): Unit = {
-    Snapshot.commit(
-      TypeNormalizer.normalize(readCsv(spark, paths: _*)), dstPath)
-    ()
-  }
 
   /** The two sides of a quarantined read, sharing one parse cache. Call
     * [[release]] once both sides are consumed — the cache backs BOTH

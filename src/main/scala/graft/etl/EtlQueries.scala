@@ -116,11 +116,12 @@ object EtlQueries extends QueryModule {
 
     // Z-order curve values over (customer, order-day) — the clustering
     // key of [[ZOrder.seedZOrdered]], the lakehouse OPTIMIZE-ZORDER
-    // analog in the Seed layout family (sorted / bucketed / partitioned /
+    // analog among the seed layouts (sorted / bucketed / partitioned /
     // z-ordered). The interleave is pure built-in bit arithmetic, so the
     // oracle restates the identical operator tree and the curve itself is
     // hash-checked; the layout property it buys (per-file 2-D boxes ->
-    // min/max pruning on BOTH dimensions) is asserted in SeedSpec.
+    // min/max pruning on BOTH dimensions, read back through the committed
+    // snapshot) is asserted in ZOrderSpec.
     "q94_zorder_curve" -> { (s, dir) =>
       Tables.t(s, dir, "orders").select(
           col("o_orderkey"),
@@ -278,9 +279,9 @@ object EtlQueries extends QueryModule {
     // sides written once CLUSTERED BY the join key into the same bucket
     // count, so every subsequent join between them is exchange-free (each
     // bucket pair joins in place; no corpus-sized shuffle, ever). The
-    // layout write is the declared query's first half (the Seed family's
-    // bucketed variant, persisted through the catalog so the reader SEES
-    // bucket metadata — a plain parquet read wouldn't); the second half
+    // layout write is the declared query's first half ([[Seed.seedBucketed]],
+    // persisted through the catalog so the reader SEES bucket
+    // metadata — a plain parquet read wouldn't); the second half
     // is the revenue-per-priority join the layout pays for. PlanGuardSpec
     // asserts the join subtree has ZERO shuffle exchanges under the join
     // and that both scans report the bucket spec; the oracle checks the
@@ -290,22 +291,14 @@ object EtlQueries extends QueryModule {
     // the key rides the same co-location.
     "q248_bucketed_join" -> { (s, dir) =>
       val wh = "/tmp/graft_bucketed_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      def seedBucketed(df: DataFrame, key: String, table: String): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        df.write.mode("overwrite").format("parquet")
-          .bucketBy(8, key).sortBy(key)
-          .option("path", s"$wh/$table").saveAsTable(table)
-      }
-      seedBucketed(Tables.t(s, dir, "orders")
+      val orders = Seed.seedBucketed(Tables.t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority")),
-        "o_orderkey", "graft_b_orders")
-      seedBucketed(Tables.t(s, dir, "lineitem")
+        "o_orderkey", "graft_b_orders", s"$wh/graft_b_orders")
+      val items = Seed.seedBucketed(Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount")),
-        "l_orderkey", "graft_b_lineitem")
-      s.table("graft_b_orders")
-        .join(s.table("graft_b_lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
+        "l_orderkey", "graft_b_lineitem", s"$wh/graft_b_lineitem")
+      orders.join(items, col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),
           sum(col("l_quantity").cast("long")).as("sum_qty"),

@@ -1,12 +1,18 @@
 package graft.etl
 
-import graft.sources.{CsvSource, ParquetSource, Source}
+import graft.sources.{CsvSource, Source}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The three user-facing pipelines (`pyopenetl/pipelines.py`), re-expressed
   * as orchestration functions over the tested kernels. The reference's
   * writer-type validation (P0, pipelines.py:17-32) is subsumed by the sealed
   * [[Source]] ADT — invalid wiring does not typecheck.
+  *
+  * These are the ETL layer's landing paths: every table they produce is
+  * normalized ([[TypeNormalizer]]) and committed through [[Snapshot]], the
+  * reference's per-write transaction (operations.py:181). A parquet seed
+  * is `seedPipeline(spark, ParquetSource(path), dst)`; a single CSV table
+  * is one entry of [[flatfilePipeline]].
   */
 object Pipelines {
 
@@ -110,10 +116,4 @@ object Pipelines {
       s"$workDir/bulk_export.tar.gz", secrets, secretName)
     flatfilePipelineFromTar(spark, local.toString, targetTables, destRoot)
   }
-
-  /** Convenience: seed straight from a lake path (the harness's common
-    * case). */
-  def seedParquet(spark: SparkSession, srcPath: String, destPath: String)
-      : DataFrame =
-    seedPipeline(spark, ParquetSource(srcPath), destPath)
 }

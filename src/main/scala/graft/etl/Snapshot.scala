@@ -6,6 +6,7 @@ import graft.sources.ParquetSchema
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Crash-atomic snapshot commit over plain parquet — the reference wraps
   * every chunk write in a transaction (`pyopenetl/operations.py:181`
@@ -151,7 +152,7 @@ object Snapshot {
   def versions(spark: SparkSession, root: String): Seq[Long] = {
     val committed =
       committedBases(commitsDir(root).getFileSystem(conf(spark)), root)
-    listVersions(spark, root).filter(committed).sorted
+    indexedDirs(spark, root, "_v").filter(committed).sorted
   }
 
   /** Read the table AS OF a retained base version — the committed state
@@ -194,26 +195,17 @@ object Snapshot {
   def currentDeltaCount(spark: SparkSession, root: String): Long =
     readPointer(spark, root).map(_.nDeltas).getOrElse(0L)
 
-  /** All `_v<N>` base directories present, committed or not (delta dirs
-    * `_v<N>_d<M>` fail the toLong parse and drop out). */
-  private def listVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val p  = new Path(root)
-    val fs = p.getFileSystem(conf(spark))
-    if (!fs.exists(p)) Nil
-    else fs.globStatus(new Path(root, "_v*")).toSeq
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName.stripPrefix("_v").toLongOption)
-  }
-
-  /** All `_d<M>` indices present for base `v`, committed or not. */
-  private def listDeltas(spark: SparkSession, root: String, v: Long)
+  /** The indices `i` of every `<prefix><i>` directory under `root`,
+    * committed or not: `_v` lists bases (delta dirs `_v<N>_d<M>` fail the
+    * index parse and drop out), `_v<N>_d` the deltas on base `N`. */
+  private def indexedDirs(spark: SparkSession, root: String, prefix: String)
       : Seq[Long] = {
     val p  = new Path(root)
     val fs = p.getFileSystem(conf(spark))
     if (!fs.exists(p)) Nil
-    else fs.globStatus(new Path(root, s"_v${v}_d*")).toSeq
+    else fs.globStatus(new Path(root, s"$prefix*")).toSeq
       .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName.stripPrefix(s"_v${v}_d").toLongOption)
+      .flatMap(s => s.getPath.getName.stripPrefix(prefix).toLongOption)
   }
 
   /** Resolve the pointer and read the committed table: the base snapshot
@@ -291,7 +283,7 @@ object Snapshot {
     val prev  = prevLine.map(parsePointer)
     // one listing serves both the next-version pick and GC; on an object
     // store that's one LIST per commit, not two
-    val seen  = listVersions(spark, root)
+    val seen  = indexedDirs(spark, root, "_v")
     val next  =
       (prev.map(_.base).getOrElse(0L) max seen.maxOption.getOrElse(0L)) + 1
 
@@ -313,7 +305,7 @@ object Snapshot {
     seen.filterNot(keep)
       .foreach { v =>
         fs.delete(versionDir(root, v), true)
-        listDeltas(spark, root, v)
+        indexedDirs(spark, root, s"_v${v}_d")
           .foreach(d => fs.delete(deltaDir(root, v, d), true))
         // markers die with their version (readVersion lists data dirs
         // first, but a live marker for dead data would make the error
@@ -348,6 +340,13 @@ object Snapshot {
     * deterministically before committing); `pk` must match the stack's
     * (verified — a key change mid-stack would silently corrupt the
     * merge). A root with no base yet takes the delta as base version 1.
+    * The delta may add or drop columns (they null-fill at read) but not
+    * re-type one: [[UpsertKernel.checkDrift]] compares it against the
+    * table as stored (base plus deltas, a footer each; the base's
+    * hive-partition columns excluded, since their stored type is the one
+    * path inference gives) and throws
+    * [[UpsertKernel.SchemaDriftException]] before anything is written,
+    * so a re-typed batch can never poison every later [[read]].
     *
     * Returns nothing: read the committed table with [[read]]. A commit
     * launches only its write jobs (plus the compaction's write when the
@@ -378,6 +377,13 @@ object Snapshot {
       case Some(p) =>
         require(p.pk.isEmpty || p.pk == pk,
           s"delta pk '$pk' does not match the stack's pk '${p.pk}' at $root")
+        // resolving plans the stored view and runs no job; the base's
+        // partition columns drop out, typed by path inference, not by
+        // their writer (a bigint key of small values reads back int)
+        val stored = resolve(spark, root, p).schema
+        UpsertKernel.checkDrift(
+          StructType(stored.filterNot(f => p.partCols.contains(f.name))),
+          delta.schema)
         // always pointer-count + 1: a crashed writer's torn _d<M+1> is
         // invisible (the pointer never named it) and the retry's
         // mode=overwrite IS the recovery — deriving the index from

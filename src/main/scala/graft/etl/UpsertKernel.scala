@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The incremental-upsert kernel — the one nontrivial algorithm in the
   * reference (`CloudSQLWriter.update_table_via_upsert`,
@@ -38,6 +39,33 @@ object UpsertKernel {
           drifted.map { case (n, o, d) => s"$n: $o -> $d" }.mkString(", ") +
           " — cast the delta explicitly (TypeNormalizer) before merging")
 
+  /** The re-typing policy, stated once for every path that lands a delta
+    * on a stored table ([[merge]] and [[Snapshot.commitDelta]]): throws
+    * [[SchemaDriftException]] if `delta` gives a column of `stored` a
+    * different type. Added and dropped columns pass (they null-fill), and
+    * so does nullability: a parquet read types every nested element and
+    * field nullable, whatever its writer declared.
+    */
+  def checkDrift(stored: StructType, delta: StructType): Unit = {
+    val storedTypes = stored.map(f => f.name -> nullable(f.dataType)).toMap
+    val drifted = delta.flatMap { f =>
+      storedTypes.get(f.name).collect {
+        case t if t != nullable(f.dataType) =>
+          (f.name, t.simpleString, f.dataType.simpleString)
+      }
+    }
+    if (drifted.nonEmpty) throw new SchemaDriftException(drifted)
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case ArrayType(e, _)  => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v),
+      valueContainsNull = true)
+    case StructType(fs)   => StructType(fs.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case other            => other
+  }
+
   /** W14 (`operations.py:716-723`): `INSERT … ON CONFLICT (pk) DO UPDATE` ≙
     * keep every old row whose pk is absent from the delta, then add the delta.
     * `unionByName` makes the reference's strict column-order requirement
@@ -49,20 +77,13 @@ object UpsertKernel {
     *    (additive drift never loses data — the posture a long-running
     *    ingest needs when upstream schemas evolve mid-stream);
     *  - column RE-TYPED by the delta → [[SchemaDriftException]] naming the
-    *    drifted columns (silent coercion corrupts; the caller decides the
-    *    cast). The pk must exist on both sides.
+    *    drifted columns ([[checkDrift]]: silent coercion corrupts; the
+    *    caller decides the cast). The pk must exist on both sides.
     */
   def merge(old: DataFrame, delta: DataFrame, pk: String): DataFrame = {
     require(delta.columns.contains(pk) && old.columns.contains(pk),
       s"upsert pk '$pk' must exist on both sides")
-    val oldTypes = old.schema.map(f => f.name -> f.dataType).toMap
-    val drifted = delta.schema.flatMap { f =>
-      oldTypes.get(f.name).collect {
-        case t if t != f.dataType =>
-          (f.name, t.simpleString, f.dataType.simpleString)
-      }
-    }
-    if (drifted.nonEmpty) throw new SchemaDriftException(drifted)
+    checkDrift(old.schema, delta.schema)
     old.join(delta.select(pk), Seq(pk), "left_anti")
       .unionByName(delta, allowMissingColumns = true)
   }

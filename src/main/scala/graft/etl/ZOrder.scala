@@ -38,14 +38,15 @@ object ZOrder {
     * dimensions — and per-column min/max statistics prune it for 2-D
     * box predicates. The z column itself is dropped before the write:
     * it is derivable, and the statistics that matter are the dimension
-    * columns' own.
+    * columns' own. The clustered frame commits through [[Snapshot]] like
+    * every other seed, so a failed layout write leaves readers on the
+    * previous version; returns a reader over the committed files.
     */
   def seedZOrdered(df: DataFrame, dstPath: String, a: Column, b: Column,
-                   nFiles: Int): Unit = {
+                   nFiles: Int): DataFrame = {
     val z = df.withColumn("_z", zValue2(a, b))
-    z.repartitionByRange(nFiles, z("_z"))
+    Snapshot.commit(z.repartitionByRange(nFiles, z("_z"))
       .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(dstPath)
+      .drop("_z"), dstPath)
   }
 }

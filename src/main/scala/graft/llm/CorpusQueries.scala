@@ -1560,9 +1560,7 @@ object CorpusQueries extends QueryModule {
     // re-derives an earlier stage's work. Counts exact longs.
     "q317_pipeline_yield" -> { (s, dir) =>
       import s.implicits._
-      val zdocs = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          array_join(TextQueries.zipfFamilyTokArray, " ").as("text"))
+      val zdocs = ZipfContracts.familyDocs(s, dir)
         .transform(graft.Checkpoints.ckpt)
       val donorId = when(col("doc_id") % 9 === 5 && col("doc_id") >= 5,
         col("doc_id") - 5)
@@ -1648,9 +1646,7 @@ object CorpusQueries extends QueryModule {
     // the proven operator's plan on a shrinking checkpointed frame.
     "q322_pipeline_yield_model" -> { (s, dir) =>
       import s.implicits._
-      val zdocs = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          array_join(TextQueries.zipfFamilyTokArray, " ").as("text"))
+      val zdocs = ZipfContracts.familyDocs(s, dir)
         .transform(graft.Checkpoints.ckpt)
       val donorId = when(col("doc_id") % 9 === 5 && col("doc_id") >= 5,
         col("doc_id") - 5)

@@ -103,29 +103,10 @@ object DedupStore {
     */
   def dropsAgainstSeen(batchPostings: DataFrame, batchToks: DataFrame,
                        seenPostings: DataFrame, seenToks: DataFrame,
-                       threshold: Double): DataFrame = {
-    val cand = batchPostings
-      .select(col("doc_id").as("a_id"), col("band"), col("band_hash"))
-      .join(seenPostings.select(col("doc_id").as("b_id"), col("band"),
-        col("band_hash")), Seq("band", "band_hash"))
-      .filter(col("b_id") < col("a_id")) // earlier doc survives
-      .select(col("a_id"), col("b_id")).distinct()
-    cand
-      .join(batchToks.select(col("doc_id").as("a_id"),
-        col("tok").as("a_tok")), "a_id")
-      .join(seenToks.select(col("doc_id").as("b_id"),
-        col("tok").as("b_tok")), "b_id")
-      .withColumn("n_common",
-        graft.functions.SortedIntersectCount.sortedIntersectCount(
-          col("a_tok"), col("b_tok")))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (size(col("a_tok")) + size(col("b_tok")) - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("a_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(round(col("jaccard"), 4)).as("best_jaccard"))
-  }
+                       threshold: Double): DataFrame =
+    verify(bandPairs(batchPostings, seenPostings)
+      .filter(col("b_id") < col("a_id")), // earlier doc survives
+      batchToks, seenToks, threshold)
 
   /** The incoming dump's near-dup drops answered FROM the standing
     * postings index — no recompute of corpus postings: candidates come
@@ -140,16 +121,28 @@ object DedupStore {
     */
   def dropsAgainstIndex(dumpPostings: DataFrame, index: DataFrame,
                         dumpToks: DataFrame, oldToks: DataFrame,
-                        threshold: Double): DataFrame = {
-    val cand = dumpPostings
+                        threshold: Double): DataFrame =
+    verify(bandPairs(dumpPostings, index), dumpToks, oldToks, threshold)
+
+  /** Doc pairs (a_id, b_id) whose postings share a band bucket, with
+    * the bucket's (band, band_hash). */
+  private def bandPairs(aPostings: DataFrame, bPostings: DataFrame)
+      : DataFrame =
+    aPostings
       .select(col("doc_id").as("a_id"), col("band"), col("band_hash"))
-      .join(index.select(col("doc_id").as("b_id"), col("band"),
+      .join(bPostings.select(col("doc_id").as("b_id"), col("band"),
         col("band_hash")), Seq("band", "band_hash"))
-      .select(col("a_id"), col("b_id")).distinct()
+
+  /** The candidate-verify tail both drop queries share: the distinct
+    * (a_id, b_id) pairs of `pairs`, exact-verified at `threshold` Jaccard
+    * on their token arrays; one row per dropped `a` doc. */
+  private def verify(pairs: DataFrame, aToks: DataFrame, bToks: DataFrame,
+                     threshold: Double): DataFrame = {
+    val cand = pairs.select(col("a_id"), col("b_id")).distinct()
     cand
-      .join(dumpToks.select(col("doc_id").as("a_id"),
+      .join(aToks.select(col("doc_id").as("a_id"),
         col("tok").as("a_tok")), "a_id")
-      .join(oldToks.select(col("doc_id").as("b_id"),
+      .join(bToks.select(col("doc_id").as("b_id"),
         col("tok").as("b_tok")), "b_id")
       .withColumn("n_common",
         graft.functions.SortedIntersectCount.sortedIntersectCount(

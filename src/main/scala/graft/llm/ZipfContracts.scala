@@ -28,7 +28,7 @@ object ZipfContracts extends QueryModule {
   /** The regenerated corpus as (doc_id, source, text) — text rebuilt
     * from the family token array so every text-consuming operator
     * (MinHashBands, simhash, split-tokenizers) runs UNCHANGED on it. */
-  private def familyDocs(s: SparkSession, dir: String): DataFrame =
+  private[llm] def familyDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         array_join(TextQueries.zipfFamilyTokArray, " ").as("text"))

@@ -480,9 +480,11 @@ object StreamingOps {
         // not O(table), its write the only job, and nothing is inferred
         // or read back; Snapshot.read folds the stack latest-wins
         // on pk (exactly UpsertKernel.merge semantics) and the stack
-        // compacts into a new base every CompactThreshold batches. A crash
-        // mid-batch leaves readers on the old complete pointer state, and
-        // the replayed batch recommits the same content. Row-level file
+        // compacts into a new base every CompactThreshold batches. A batch
+        // that re-types a stored column fails the stream before writing
+        // (UpsertKernel.checkDrift). A crash mid-batch leaves readers on
+        // the old complete pointer state, and the replayed batch
+        // recommits the same content. Row-level file
         // rewrites (beyond snapshot+delta) remain the Delta/Iceberg seam
         // at 100 TB (SURVEY.md §7.3).
         graft.etl.Snapshot.commitDelta(latest, destPath, pk)

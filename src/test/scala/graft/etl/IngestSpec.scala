@@ -1,6 +1,8 @@
 package graft.etl
 
 import graft.{Tables, TestSpark}
+import graft.sources.ParquetSource
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Seed (W9) and CSV ingest (W10/W13) round-trips through real files. */
@@ -9,22 +11,24 @@ class IngestSpec extends AnyFunSuite {
 
   test("seed round-trips schema and rows (snapshot copy)") {
     val dst = s"/tmp/graft-test-seed-${System.nanoTime()}"
-    Seed.seed(spark, s"${TestSpark.Sf}/nation.parquet", dst, Seq("n_nationkey"))
-    val out = Seed.readBack(spark, dst)
-    val src = spark.read.parquet(s"${TestSpark.Sf}/nation.parquet")
-    assert(out.count() == src.count())
-    assert(out.schema == src.schema)
+    val src = s"${TestSpark.Sf}/nation.parquet"
+    Pipelines.seedPipeline(spark, ParquetSource(src), dst, Seq("n_nationkey"))
+    val out = Snapshot.read(spark, dst)
+    val in  = spark.read.parquet(src)
+    assert(out.count() == in.count())
+    assert(out.schema == in.schema)
   }
 
   test("csv ingest infers schema and preserves rows (flatfile pipeline)") {
     val csvDir = s"/tmp/graft-test-csv-${System.nanoTime()}"
-    val dst    = s"/tmp/graft-test-csv-out-${System.nanoTime()}"
+    val root   = s"/tmp/graft-test-csv-out-${System.nanoTime()}"
     val nation = Tables.t(spark, TestSpark.Sf, "nation")
     nation.write.option("header", "true").csv(csvDir)
-    CsvIngest.ingest(spark, dst, csvDir)
-    val back = Snapshot.read(spark, dst)
+    Pipelines.flatfilePipeline(spark, Map("nation" -> Seq(csvDir)), root)
+    val back = Snapshot.read(spark, s"$root/nation")
     assert(back.count() == nation.count())
     assert(back.columns.sorted.sameElements(nation.columns.sorted))
+    assert(back.schema("n_nationkey").dataType == IntegerType)
   }
 
   test("dirty csv rows quarantine instead of aborting or silently nulling") {
@@ -48,8 +52,9 @@ class IngestSpec extends AnyFunSuite {
 
   test("bucketed seed enables shuffle-free self-join on the bucket column") {
     val t = s"orders_bucketed_${System.nanoTime()}"
-    val out = Seed.seedBucketed(spark, s"${TestSpark.Sf}/orders.parquet",
-      t, "o_custkey", 4)
+    val out = Seed.seedBucketed(
+      spark.read.parquet(s"${TestSpark.Sf}/orders.parquet"), "o_custkey", t,
+      s"/tmp/graft-test-bucketed-${System.nanoTime()}")
     assert(out.count() == 1500)
     // force a shuffling join shape (the table is small enough to broadcast,
     // which would bypass bucketing entirely)
@@ -71,7 +76,8 @@ class IngestSpec extends AnyFunSuite {
     val dst = s"/tmp/graft-test-seed-part-${System.nanoTime()}"
     val ev  = Tables.t(spark, TestSpark.Sf, "events")
       .withColumn("event_date", to_date(col("ts")))
-    val back = Seed.seedPartitioned(ev, dst, "event_date")
+    val back = Snapshot.commit(TypeNormalizer.normalize(ev), dst,
+      partitionCols = Seq("event_date"))
     assert(back.count() == ev.count())
 
     val oneDay = back.filter(col("event_date") === lit("2024-01-15"))

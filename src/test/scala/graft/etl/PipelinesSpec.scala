@@ -13,7 +13,8 @@ class PipelinesSpec extends AnyFunSuite {
 
   test("seed pipeline snapshots a parquet source") {
     val dst = s"/tmp/graft-test-pipe-seed-${System.nanoTime()}"
-    val out = Pipelines.seedParquet(spark, s"${TestSpark.Sf}/region.parquet", dst)
+    val out = Pipelines.seedPipeline(spark,
+      ParquetSource(s"${TestSpark.Sf}/region.parquet"), dst)
     assert(out.count() == 5)
   }
 

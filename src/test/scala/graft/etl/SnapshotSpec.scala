@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.TestSpark
+import graft.{SourceGuard, TestSpark}
 import graft.TestSpark.jobsDuring
 import graft.sources.ParquetSchema
 import org.apache.hadoop.fs.Path
@@ -333,6 +333,73 @@ class SnapshotSpec extends AnyFunSuite {
     val out = Snapshot.read(spark, root).orderBy("id").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(2)) None else Some(r.getLong(2))))
     assert(out.toSeq == Seq((1L, None), (2L, Some(42L))))
+  }
+
+  test("a re-typed delta is rejected before anything is written") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(Seq((1L, 10), (2L, 20)).toDF("id", "v"), root)
+    // w exists only in the stacked delta: the check reads base + deltas
+    Snapshot.commitDelta(Seq((3L, 30, 7)).toDF("id", "v", "w"), root, "id")
+    val pointer = new Path(root, "_current")
+    def pointerLine() = {
+      val in = fs.open(pointer)
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+    def rows() = Snapshot.read(spark, root).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val before = (pointerLine(), rows())
+    assert(before._2 == Seq((1L, 10), (2L, 20), (3L, 30)))
+    val retyped = Seq(
+      "v" -> Seq((4L, "forty")).toDF("id", "v"),
+      "v" -> Seq((4L, 40L)).toDF("id", "v"),
+      "w" -> Seq((4L, 40, "seven")).toDF("id", "v", "w"))
+    retyped.foreach { case (column, delta) =>
+      val e = intercept[UpsertKernel.SchemaDriftException] {
+        Snapshot.commitDelta(delta, root, "id")
+      }
+      assert(e.drifted.map(_._1) == Seq(column), e.getMessage)
+      assert(!fs.exists(new Path(root, "_v1_d2")))
+      assert((pointerLine(), rows()) == before)
+    }
+  }
+
+  test("a same-typed delta lands on a hive-partitioned base") {
+    import spark.implicits._
+    // path inference types both partition columns int: `year` was
+    // written bigint, `bucket` a numeric-looking string
+    val root = freshRoot()
+    Snapshot.commit(Seq((1L, 2020L, "10", 1.0), (2L, 2021L, "20", 2.0))
+      .toDF("id", "year", "bucket", "v"), root,
+      partitionCols = Seq("year", "bucket"))
+    assert(Snapshot.read(spark, root).schema("year").dataType == IntegerType)
+    // the second delta resolves against base plus the first
+    Snapshot.commitDelta(Seq((2L, 2021L, "20", 2.5))
+      .toDF("id", "year", "bucket", "v"), root, "id")
+    Snapshot.commitDelta(Seq((3L, 2022L, "30", 3.0))
+      .toDF("id", "year", "bucket", "v"), root, "id")
+    assert(Snapshot.currentDeltaCount(spark, root) == 2)
+    val got = Snapshot.read(spark, root).orderBy("id").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Any]("year").toString,
+        r.getAs[Any]("bucket").toString, r.getAs[Double]("v"))).toSeq
+    assert(got == Seq((1L, "2020", "10", 1.0), (2L, "2021", "20", 2.5),
+      (3L, "2022", "30", 3.0)))
+    // a data column is still checked
+    intercept[UpsertKernel.SchemaDriftException] {
+      Snapshot.commitDelta(Seq((4L, 2022L, "30", "x"))
+        .toDF("id", "year", "bucket", "v"), root, "id")
+    }
+  }
+
+  test("no parquet write under graft/etl bypasses Snapshot") {
+    // Seed.seedBucketed is the one writer outside Snapshot: its bucket
+    // metadata lives in the catalog (saveAsTable)
+    def writesParquet(code: String) = !code.contains("read.") &&
+      (code.contains(".parquet(") || code.contains("format(\"parquet\")"))
+    val sites = SourceGuard.sitesWhere(Seq("src/main/scala/graft/etl"),
+      exempt = "Snapshot.scala")(writesParquet)
+      .filterNot(_.contains("/Seed.scala:"))
+    assert(sites.isEmpty, s"land tables with Snapshot.commit: $sites")
   }
 
   test("a missing committed version fails loudly, not with wrong data") {

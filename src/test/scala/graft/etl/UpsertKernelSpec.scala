@@ -91,6 +91,17 @@ class UpsertKernelSpec extends AnyFunSuite {
     assert(e.getMessage.contains("v: string -> bigint"))
   }
 
+  test("schema drift: nested nullability alone is not a re-type") {
+    import org.apache.spark.sql.types._
+    val stored = StructType(Seq(StructField("tok", ArrayType(LongType))))
+    UpsertKernel.checkDrift(stored, StructType(Seq(StructField("tok",
+      ArrayType(LongType, containsNull = false), nullable = false))))
+    intercept[UpsertKernel.SchemaDriftException] {
+      UpsertKernel.checkDrift(stored,
+        StructType(Seq(StructField("tok", ArrayType(IntegerType)))))
+    }
+  }
+
   test("a delta missing the pk column fails loudly") {
     val old   = frame((1L, "2024-01-01 00:00:00", "a"))
     val delta = frame((2L, "2024-01-09 00:00:00", "b")).drop("id")

@@ -30,7 +30,7 @@ class ZOrderSpec extends AnyFunSuite {
     val b = datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
     ZOrder.seedZOrdered(orders, dir, a, b, nFiles = 8)
 
-    val back = spark.read.parquet(dir)
+    val back = Snapshot.read(spark, dir)
       .withColumn("z", ZOrder.zValue2(a, b))
       .withColumn("f", input_file_name())
     val ranges = back.groupBy(col("f"))

@@ -12,6 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
               event_type: String, value: Double)
 
+/** [[Ev]] with `value` re-typed double -> string. */
+case class EvRetyped(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+                     event_type: String, value: String)
+
 case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
 
 case class QDoc(doc_id: Long, source: String, text: String)
@@ -588,6 +592,29 @@ class StreamingSpec extends AnyFunSuite {
     val out = graft.etl.Snapshot.read(spark, dest).orderBy("event_id")
       .collect().map(r => (r.getLong(0), r.getString(3)))
     assert(out.toSeq == Seq((100L, "updated"), (101L, "new")))
+  }
+
+  test("upsert sink fails the stream on a re-typed batch; D reads as before") {
+    val dest = s"/tmp/graft-test-upsert-drift-${System.nanoTime()}"
+    graft.etl.Snapshot.commit(
+      Seq(Ev(100, ts("2024-01-01 09:00:00"), 9, "seed", 0.5)).toDF(), dest)
+    def rows() = graft.etl.Snapshot.read(spark, dest).orderBy("event_id")
+      .collect().map(r => (r.getLong(0), r.getString(3), r.getDouble(4)))
+      .toSeq
+    val before = rows()
+    val ms = MemoryStream[EvRetyped](spark)
+    ms.addData(EvRetyped(100, ts("2024-01-01 10:00:00"), 9, "bad", "1.5"),
+               EvRetyped(101, ts("2024-01-01 10:01:00"), 9, "bad", "2.5"))
+    val q = StreamingOps.upsertSink(ms.toDF(), dest, "event_id").start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination(60000)
+      throw q.exception.get
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[
+      graft.etl.UpsertKernel.SchemaDriftException]), e.toString)
+    assert(graft.etl.Snapshot.currentDeltaCount(spark, dest) == 0L)
+    assert(rows() == before)
   }
 
   test("upsert sink killed after the data commit recovers exactly-once") {
