@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Deterministic cleanup for iterative algorithms' localCheckpoints.
   *
@@ -27,8 +28,8 @@ object Checkpoints {
     * q321's scorer) and per-round iterative states should instead use
     * RELIABLE checkpoints: set `spark.graft.checkpoint.reliable=true`
     * and a checkpoint dir (`spark.checkpoint.dir`, any HDFS-compatible
-    * path) and every ckpt() site — which is every plain localCheckpoint
-    * in the query modules — writes its rows there, surviving executor
+    * path) and every ckpt() and [[ckptSerialized]] site — which is every
+    * checkpoint in the program — writes its rows there, surviving executor
     * loss at the cost of one distributed write+read. Local default stays
     * `false`: the bench/verify sessions are one JVM, where local blocks
     * are both safe and measurably cheaper. (Reliable checkpoint FILES
@@ -38,10 +39,20 @@ object Checkpoints {
     * checkpoints and are harmless no-ops on file-backed ones.)
     */
   def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.checkpoint.reliable", "false").toBoolean)
+    if (reliable(df))
       df.checkpoint()
     else df.localCheckpoint()
+
+  /** [[ckpt]] for the corpus-scale edge lists PageRank, BFS and SSSP
+    * hold across every round: local blocks are stored serialized (one
+    * byte array per block, not millions of row objects for GC to trace). */
+  def ckptSerialized(df: DataFrame): DataFrame =
+    if (reliable(df)) df.checkpoint()
+    else df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+
+  private def reliable(df: DataFrame): Boolean =
+    df.sparkSession.conf.get("spark.graft.checkpoint.reliable", "false")
+      .toBoolean
 
   /** Release the cached blocks behind a localCheckpointed frame. The
     * frame must not be read again (its lineage is truncated — there is

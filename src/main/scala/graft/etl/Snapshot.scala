@@ -345,8 +345,9 @@ object Snapshot {
     * table as stored (base plus deltas, a footer each; the base's
     * hive-partition columns excluded, since their stored type is the one
     * path inference gives) and throws
-    * [[UpsertKernel.SchemaDriftException]] before anything is written,
-    * so a re-typed batch can never poison every later [[read]].
+    * [[UpsertKernel.SchemaDriftException]] naming `root` before anything
+    * is written, so a re-typed batch can never poison every later
+    * [[read]].
     *
     * Returns nothing: read the committed table with [[read]]. A commit
     * launches only its write jobs (plus the compaction's write when the
@@ -383,7 +384,7 @@ object Snapshot {
         val stored = resolve(spark, root, p).schema
         UpsertKernel.checkDrift(
           StructType(stored.filterNot(f => p.partCols.contains(f.name))),
-          delta.schema)
+          delta.schema, s"delta for table $root")
         // always pointer-count + 1: a crashed writer's torn _d<M+1> is
         // invisible (the pointer never named it) and the retry's
         // mode=overwrite IS the recovery — deriving the index from

@@ -31,11 +31,13 @@ object UpsertKernel {
     * the one schema drift no null-fill can paper over. Mirrors the
     * reference's fail-loud posture on unmappable types
     * (`operations.py:262-266`), but names the offending columns instead of
-    * surfacing an opaque analysis error.
+    * surfacing an opaque analysis error. `target` says which delta: the
+    * batch merge's, or the table root a [[Snapshot.commitDelta]] refused.
     */
-  final class SchemaDriftException(val drifted: Seq[(String, String, String)])
+  final class SchemaDriftException(val drifted: Seq[(String, String, String)],
+                                   val target: String = "upsert delta")
       extends IllegalArgumentException(
-        "upsert delta re-types existing column(s): " +
+        s"$target re-types existing column(s): " +
           drifted.map { case (n, o, d) => s"$n: $o -> $d" }.mkString(", ") +
           " — cast the delta explicitly (TypeNormalizer) before merging")
 
@@ -46,7 +48,8 @@ object UpsertKernel {
     * so does nullability: a parquet read types every nested element and
     * field nullable, whatever its writer declared.
     */
-  def checkDrift(stored: StructType, delta: StructType): Unit = {
+  def checkDrift(stored: StructType, delta: StructType,
+                 target: String = "upsert delta"): Unit = {
     val storedTypes = stored.map(f => f.name -> nullable(f.dataType)).toMap
     val drifted = delta.flatMap { f =>
       storedTypes.get(f.name).collect {
@@ -54,7 +57,7 @@ object UpsertKernel {
           (f.name, t.simpleString, f.dataType.simpleString)
       }
     }
-    if (drifted.nonEmpty) throw new SchemaDriftException(drifted)
+    if (drifted.nonEmpty) throw new SchemaDriftException(drifted, target)
   }
 
   private def nullable(t: DataType): DataType = t match {

@@ -23,11 +23,14 @@ import org.apache.spark.sql.functions._
   *    by single IEEE divisions and one SQRT (correctly rounded in both
   *    engines); a zero-variance feature standardizes with sd = 1
   *    (constant column -> z = 0, which GD correctly ignores);
-  *  - the per-document prediction is a FIXED-ORDER left-associated
-  *    double dot product against the round's weights (engine: literal
-  *    weights folded j = 0..21; oracle: the same explicit sum over a
-  *    pivoted 1-row weight table), so both engines execute the
-  *    identical IEEE sequence;
+  *  - the per-document prediction is a FIXED-ORDER left-to-right
+  *    double dot product against the round's weights (engine: the fused
+  *    [[graft.functions.DotProduct]] over z and one weight-array
+  *    literal, j = 0..21 from +0.0; oracle: the explicit left-associated
+  *    sum over a pivoted 1-row weight table), so both engines execute
+  *    the identical IEEE sequence — the leading +0.0 can only turn a
+  *    −0.0 sum into +0.0, and the bias term (1.0 times a weight that
+  *    starts at +0.0 and is never −0.0) already does that;
   *  - gradient components and the MSE are dsum18 sums of per-row
   *    products, divided by the document count and scaled by the DYADIC
   *    learning rate 0.5 — every update is exactly reproducible.
@@ -46,15 +49,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the 100 TB story): the feature frame is built by ONE
   * corpus scan plus the q180 vocabulary-sized sign join, then
-  * checkpointed; every training round is a single aggregate-only pass
-  * over that frame — partial aggregation reduces each partition to one
-  * 23-column row, so a round shuffles O(partitions) rows and collects
-  * exactly one. No corpus-sized shuffle ever repeats; the weight vector
-  * (22 doubles) is the only state that moves between rounds, exactly
-  * how a parameter server would run it. Reference scope: quality
-  * filtering extends the corpus pipeline the reference seeds
-  * (pyopenetl/pipelines.py:1-60); training-stage prep is the SURVEY
-  * §2.3 extension surface.
+  * checkpointed; every training round is ONE job, a shuffle-free scan
+  * of that frame whose 23 exact sums ride `Dataset.observe` — each task
+  * reduces its partition to one 23-value buffer and the driver merges
+  * them. No corpus-sized shuffle ever repeats; the weight vector (22
+  * doubles, one array literal held by reference) is the only state that
+  * moves between rounds, exactly how a parameter server would run it,
+  * and rounds after the first reuse the first round's generated
+  * classes. Reference scope: quality filtering extends the corpus
+  * pipeline the reference seeds (pyopenetl/pipelines.py:1-60);
+  * training-stage prep is the SURVEY §2.3 extension surface.
   */
 object QualityClassifier extends QueryModule {
 
@@ -75,8 +79,8 @@ object QualityClassifier extends QueryModule {
     * final weights. */
   private[llm] case class Trained(z: DataFrame, nDocs: Long,
                              traj: Seq[(Int, Int, Double, Double)],
-                             w: Array[Double], mu: Array[Double],
-                             sd: Array[Double])
+                             w: Seq[Double], mu: Seq[Double],
+                             sd: Seq[Double])
 
   /** Mann-Whitney tallies → AUC row(s), optionally grouped. Expects
     * columns (n_pos, n_neg, neg_offset, local_neg_below) per distinct
@@ -108,6 +112,39 @@ object QualityClassifier extends QueryModule {
       ((col("gtp").cast("double") + lit(0.5) * col("tiep").cast("double")) /
         (d19(col("n_pos")) * d19(col("n_neg"))).cast("double"))
         .as("auc")): _*)
+  }
+
+  /** ROC-AUC of `score` against the label `y`, per `groupCols`, as the
+    * Mann-Whitney statistic: AUC = (#(pos > neg) + ½·#(pos = neg)) /
+    * (P·Q) over all pos/neg score pairs. The pair counts come from
+    * per-distinct-score tallies and a cumulative negatives-below count —
+    * never the O(n²) pair join — and the cumulative rides the q91
+    * two-phase distributed prefix sum (bucket = floor(score·64):
+    * within-bucket window + a broadcast #buckets-row offset table), so
+    * no corpus-sized frame ever passes through a single-partition
+    * window. Everything is exact long arithmetic until [[aucFinish]]'s
+    * one IEEE division, so the raw AUC double crosses engines bit for
+    * bit. */
+  private def auc(scored: DataFrame, groupCols: Seq[String] = Nil)
+      : DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val g = groupCols.map(col)
+    val v = scored.groupBy(g :+ col("score"): _*)
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_pos"))
+      .withColumn("n_neg", col("n") - col("n_pos"))
+      .withColumn("bucket", floor(col("score") * 64).cast("long"))
+    val wLocal = Window.partitionBy(g :+ col("bucket"): _*)
+      .orderBy(col("score")).rowsBetween(Window.unboundedPreceding, -1)
+    val local = v.withColumn("local_neg_below",
+      coalesce(sum(col("n_neg")).over(wLocal), lit(0L)))
+    val wB = Window.partitionBy(g: _*).orderBy(col("bucket"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = v.groupBy(g :+ col("bucket"): _*)
+      .agg(sum(col("n_neg")).as("bt"))
+      .withColumn("neg_offset", coalesce(sum(col("bt")).over(wB), lit(0L)))
+      .select(g :+ col("bucket") :+ col("neg_offset"): _*)
+    aucFinish(local.join(broadcast(offsets), groupCols :+ "bucket"), groupCols)
   }
 
   /** q169's leakage-safe train/held-out partition as a (doc_id,
@@ -206,6 +243,20 @@ object QualityClassifier extends QueryModule {
     (lab, f)
   }
 
+  /** The wide standardized frame (doc_id, z) of long-format features
+    * `f` (doc_id, j, x): z(1..D-1) is x standardized by `mu`/`sd` in j
+    * order, z(D) = bias 1.0. */
+  private def standardized(f: DataFrame, mu: Seq[Double], sd: Seq[Double])
+      : DataFrame = {
+    val muLit = typedlit(mu)
+    val sdLit = typedlit(sd)
+    f.groupBy(col("doc_id"))
+      .agg(array_sort(collect_list(struct(col("j"), col("x")))).as("jx"))
+      .select(col("doc_id"), concat(transform(col("jx"), e =>
+        (e.getField("x") - element_at(muLit, e.getField("j") + 1)) /
+          element_at(sdLit, e.getField("j") + 1)), array(lit(1.0))).as("z"))
+  }
+
   private[llm] def trainFrame(docs: DataFrame, mlLo: Double,
                               splitOpt: Option[DataFrame] = None)
       : Trained = {
@@ -248,18 +299,11 @@ object QualityClassifier extends QueryModule {
       val v = r.getDouble(1) / nDocs.toDouble
       sd(r.getInt(0)) = if (v == 0.0) 1.0 else math.sqrt(v)
     }
-    val sdLit = typedlit(sd.toSeq)
 
-    // wide standardized frame: z(1..D-1) by j order, z(D) = bias 1.0;
     // ALL docs standardize (with the train-side stats under a split)
-    val zwAll = f.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("j"), col("x")))).as("jx"))
-      .select(col("doc_id"), transform(col("jx"), e =>
-        (e.getField("x") - element_at(muLit, e.getField("j") + 1)) /
-          element_at(sdLit, e.getField("j") + 1)).as("zs"))
+    val zwAll = standardized(f, mu.toSeq, sd.toSeq)
       .join(lab.select(col("doc_id"), col("source"), col("y")), "doc_id")
-      .select(col("doc_id"), col("source"), col("y"),
-        concat(col("zs"), array(lit(1.0))).as("z"))
+      .select(col("doc_id"), col("source"), col("y"), col("z"))
     val zw = splitOpt.fold(zwAll)(sp => zwAll.join(sp, "doc_id"))
       .transform(graft.Checkpoints.ckpt)
     Checkpoints.free(f)
@@ -267,26 +311,43 @@ object QualityClassifier extends QueryModule {
     // train-filtered stats pass) is already the matching denominator
     val gd = splitOpt.fold(zw)(_ => zw.filter(col("is_train")))
 
-    // k rounds: one aggregate-only pass each; weights live on the driver
+    // k rounds: one observed pass each; weights live on the driver
     // (22 doubles — the dimension-bounded state the PCA covariance
     // collect precedent blesses, SimilarityQueries.scala:311)
     val w = Array.fill(D)(0.0)
     val traj = Seq.newBuilder[(Int, Int, Double, Double)]
     for (r <- 1 to Rounds) {
-      val dot = (0 until D)
-        .map(j => element_at(col("z"), j + 1) * lit(w(j)))
-        .reduce(_ + _) // left-associated: the oracle spells the same order
-      val resid = dot - col("y")
-      val aggCols = (0 until D).map(j =>
-        Fns.dsum18(resid * element_at(col("z"), j + 1)).as(s"g$j")) :+
-        Fns.dsum18(resid * resid).as("msum")
-      val row = gd.agg(aggCols.head, aggCols.tail: _*).head()
-      val mse = row.getDouble(D) / nDocs.toDouble
+      val sums = roundSums(gd, w.toSeq)
+      val mse = sums(D) / nDocs.toDouble
       for (j <- 0 until D)
-        w(j) = w(j) - Eta * (row.getDouble(j) / nDocs.toDouble)
+        w(j) = w(j) - Eta * (sums(j) / nDocs.toDouble)
       traj ++= (0 until D).map(j => (r, j, w(j), mse))
     }
-    Trained(zw, nDocs, traj.result(), w, mu, sd)
+    Trained(zw, nDocs, traj.result(), w.toSeq, mu.toSeq, sd.toSeq)
+  }
+
+  /** Each document's prediction under weights `w`: z · w, accumulated
+    * left to right from +0.0. `w` rides the plan as ONE array literal,
+    * which [[graft.functions.FuseDotProduct]] fuses with z into a
+    * [[graft.functions.DotProduct]]; generated code reads the array by
+    * reference, so a new weight vector compiles no new class. */
+  private[llm] def score(w: Seq[Double]): Column =
+    SimilarityQueries.dot(col("z"), typedlit(w))
+
+  /** One GD round's exact [[Fns.dsum18]] sums over the (z, y) frame
+    * `gd`: Σ r·z_j for j < D, then Σ r², of the residual r = score(w) − y.
+    * r is a projection of its own (its 24 references keep CollapseProject
+    * from inlining it), so the sums' code never sees the weights; they
+    * are observed on one noop scan: one job per round, no collect. */
+  private[llm] def roundSums(gd: DataFrame, w: Seq[Double]): Seq[Double] = {
+    val r = col("r")
+    val terms = (0 until D).map(j => r * element_at(col("z"), j + 1)) :+ r * r
+    val sums = terms.indices.map(i => Fns.dsum18(terms(i)).as(s"s$i"))
+    val obs = new org.apache.spark.sql.Observation()
+    gd.select(col("z"), (score(w) - col("y")).as("r"))
+      .observe(obs, sums.head, sums.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    sums.indices.map(i => obs.get(s"s$i").asInstanceOf[Double])
   }
 
   /** The ledger's classifier stage (q322): train the probe ON `input`
@@ -294,27 +355,33 @@ object QualityClassifier extends QueryModule {
     * checkpointed (doc_id, score) frame; the z frame is freed. */
   private[llm] def scoredDocs(input: DataFrame, mlLo: Double): DataFrame = {
     val t = trainFrame(input, mlLo)
-    val dot = (0 until D)
-      .map(j => element_at(col("z"), j + 1) * lit(t.w(j)))
-      .reduce(_ + _)
-    val out = t.z.select(col("doc_id"), dot.as("score")).transform(graft.Checkpoints.ckpt)
+    val out = t.z.select(col("doc_id"), score(t.w).as("score"))
+      .transform(graft.Checkpoints.ckpt)
     Checkpoints.free(t.z)
     out
   }
+
+  /** The oracle's spelling of [[score]]: the explicit left-associated
+    * sum over `zs` and the pivoted weight row `wp`. */
+  private val ScoreSql =
+    (0 until D).map(j => s"zs[${j + 1}] * wp.w$j").mkString("(", " + ", ")")
+
+  /** CTE `name`: the (j, w) weight table `from` pivoted to one row of
+    * w0..w{D-1}. */
+  private def pivotSql(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT ${(0 until D).map(j =>
+            s"MAX(CASE WHEN j = $j THEN w END) AS w$j").mkString(", ")}
+       |  FROM $from)""".stripMargin
 
   /** The SQL twin of [[scoredDocs]]' readout: the wpf weight pivot +
     * the per-doc score CTE, appended after [[chainFrom]] — exposes
     * `mscore` (doc_id, score) to the embedding query. */
   private[llm] def modelScoreSql: String =
     s""",
-       |wpf AS (
-       |  SELECT ${(0 until D).map(j =>
-            s"MAX(CASE WHEN j = $j THEN w END) AS w$j").mkString(", ")}
-       |  FROM w$Rounds),
+       |${pivotSql("wpf", s"w$Rounds")},
        |mscore AS MATERIALIZED (
-       |  SELECT zw.doc_id,
-       |    (${(0 until D).map(j => s"zs[${j + 1}] * wp.w$j")
-            .mkString(" + ")}) AS score
+       |  SELECT zw.doc_id, $ScoreSql AS score
        |  FROM zw CROSS JOIN wpf wp)""".stripMargin
 
   /** The deployable model artifact: weights PLUS the frozen train-time
@@ -329,7 +396,7 @@ object QualityClassifier extends QueryModule {
   private[graft] def fitModel(s: SparkSession, dir: String): QualityModel = {
     val t = train(s, dir)
     Checkpoints.free(t.z)
-    QualityModel(t.w.toSeq, t.mu.toSeq, t.sd.toSeq)
+    QualityModel(t.w, t.mu, t.sd)
   }
 
   /** Score raw (doc_id, source, text) rows with a FROZEN model — the
@@ -337,25 +404,13 @@ object QualityClassifier extends QueryModule {
     * scorer. Everything is per-doc: the hash-dim signs are per-token
     * md5 arithmetic (no corpus-level vocabulary state), the
     * standardization uses the model's mu/sd literals, and the dot is
-    * the same left-associated fold the trainer used — so ANY subset of
-    * a corpus scores identically to the full pass, which is exactly
-    * the split-invariance the streaming spec asserts. */
+    * the trainer's own [[score]] — so ANY subset of a corpus scores
+    * identically to the full pass, which is exactly the
+    * split-invariance the streaming spec asserts. */
   private[graft] def scoreRaw(docs: DataFrame, m: QualityModel,
                               mlLo: Double = 3.0): DataFrame = {
     val (_, f) = featurize(docs, mlLo)
-    val muLit = typedlit(m.mu)
-    val sdLit = typedlit(m.sd)
-    val z = f.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("j"), col("x")))).as("jx"))
-      .select(col("doc_id"), transform(col("jx"), e =>
-        (e.getField("x") - element_at(muLit, e.getField("j") + 1)) /
-          element_at(sdLit, e.getField("j") + 1)).as("zs"))
-      .select(col("doc_id"),
-        concat(col("zs"), array(lit(1.0))).as("z"))
-    val dot = (0 until D)
-      .map(j => element_at(col("z"), j + 1) * lit(m.w(j)))
-      .reduce(_ + _)
-    z.select(col("doc_id"), dot.as("score"))
+    standardized(f, m.mu, m.sd).select(col("doc_id"), score(m.w).as("score"))
   }
 
   override def queries
@@ -375,43 +430,13 @@ object QualityClassifier extends QueryModule {
 
     // ROC-AUC of the trained scorer against the gate label — the
     // canonical threshold-free eval of a quality classifier, computed
-    // EXACTLY as the Mann-Whitney statistic: AUC = (#(pos > neg) +
-    // ½·#(pos = neg)) / (P·Q) over all pos/neg score pairs. The pair
-    // counts come from per-distinct-score tallies and a cumulative
-    // negatives-below count — never the O(n²) pair join — and the
-    // cumulative rides the q91 two-phase distributed prefix sum
-    // (bucket = floor(score·64): within-bucket window + a broadcast
-    // #buckets-row offset table), so no corpus-sized frame ever passes
-    // through a single-partition window. Everything is exact long
-    // arithmetic until the one final IEEE division, so the raw AUC
-    // double crosses engines bit-for-bit (the oracle states the same
-    // tallies with a plain cumulative window — same values, any plan).
-    // Measured 0.9994 at sf0.01 (0.9988 at sf0.001): a near-perfect ranker of
-    // the gate it never saw.
+    // EXACTLY ([[auc]]); the oracle states the same tallies with a
+    // plain cumulative window — same values, any plan. Measured 0.9994
+    // at sf0.01 (0.9988 at sf0.001): a near-perfect ranker of the gate
+    // it never saw.
     "q319_quality_auc" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val t = train(s, dir)
-      val dot = (0 until D)
-        .map(j => element_at(col("z"), j + 1) * lit(t.w(j)))
-        .reduce(_ + _)
-      val v = t.z.select(col("y"), dot.as("score"))
-        .groupBy(col("score"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_pos"))
-        .withColumn("n_neg", col("n") - col("n_pos"))
-        .withColumn("bucket", floor(col("score") * 64).cast("long"))
-      val wLocal = Window.partitionBy(col("bucket")).orderBy(col("score"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val local = v.withColumn("local_neg_below",
-        coalesce(sum(col("n_neg")).over(wLocal), lit(0L)))
-      val wB = Window.orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = v.groupBy(col("bucket"))
-        .agg(sum(col("n_neg")).as("bt"))
-        .withColumn("neg_offset",
-          coalesce(sum(col("bt")).over(wB), lit(0L)))
-        .select(col("bucket"), col("neg_offset"))
-      aucFinish(local.join(broadcast(offsets), "bucket"))
+      auc(t.z.select(col("y"), score(t.w).as("score")))
     },
 
     // Held-out generalization AUC — the honest FineWeb-Edu number the
@@ -421,39 +446,15 @@ object QualityClassifier extends QueryModule {
     // the sides and scores the model on its own training twin), with
     // standardization stats ALSO train-side only (mu/sd are part of
     // the model), then report the Mann-Whitney AUC on the held-out
-    // 20% beside the in-sample number — one row per split, same
-    // per-distinct-score tallies + q91 two-phase prefix sum per split,
-    // same DECIMAL(38,0) pair accumulators, exact to the one final
-    // IEEE division. Measured heldout 0.998 at sf0.01: the probe
+    // 20% beside the in-sample number — one row per split, each the
+    // exact [[auc]]. Measured heldout 0.998 at sf0.01: the probe
     // genuinely generalizes — the 21 features, not memorized rows,
     // carry the gate.
     "q320_quality_holdout" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val spl = leakageSafeSplit(s, dir)
       val t = train(s, dir, Some(spl))
       Checkpoints.free(spl)
-      val dot = (0 until D)
-        .map(j => element_at(col("z"), j + 1) * lit(t.w(j)))
-        .reduce(_ + _)
-      val v = t.z.select(col("is_train"), col("y"), dot.as("score"))
-        .groupBy(col("is_train"), col("score"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_pos"))
-        .withColumn("n_neg", col("n") - col("n_pos"))
-        .withColumn("bucket", floor(col("score") * 64).cast("long"))
-      val wLocal = Window.partitionBy(col("is_train"), col("bucket"))
-        .orderBy(col("score"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val local = v.withColumn("local_neg_below",
-        coalesce(sum(col("n_neg")).over(wLocal), lit(0L)))
-      val wB = Window.partitionBy(col("is_train")).orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = v.groupBy(col("is_train"), col("bucket"))
-        .agg(sum(col("n_neg")).as("bt"))
-        .withColumn("neg_offset",
-          coalesce(sum(col("bt")).over(wB), lit(0L)))
-        .select(col("is_train"), col("bucket"), col("neg_offset"))
-      aucFinish(local.join(broadcast(offsets), Seq("is_train", "bucket")),
+      auc(t.z.select(col("is_train"), col("y"), score(t.w).as("score")),
         Seq("is_train"))
         .select(when(col("is_train"), lit("train"))
           .otherwise(lit("heldout")).as("split"),
@@ -468,10 +469,7 @@ object QualityClassifier extends QueryModule {
     // from features alone.
     "q312_quality_score" -> { (s, dir) =>
       val t = train(s, dir)
-      val dot = (0 until D)
-        .map(j => element_at(col("z"), j + 1) * lit(t.w(j)))
-        .reduce(_ + _)
-      t.z.select(col("source"), col("y"), dot.as("score"))
+      t.z.select(col("source"), col("y"), score(t.w).as("score"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("y") === 1.0, 1L).otherwise(0L)).as("n_label_pos"),
@@ -601,14 +599,9 @@ object QualityClassifier extends QueryModule {
          |  SELECT CAST(j AS INTEGER) AS j, 0.0 AS w
          |  FROM UNNEST(GENERATE_SERIES(0, ${D - 1})) AS g(j))""".stripMargin
     val steps = (1 to rounds).map { r =>
-      val dot = (0 until D)
-        .map(j => s"zs[${j + 1}] * wp.w$j").mkString(" + ")
-      s"""wp${r - 1} AS (
-         |  SELECT ${(0 until D).map(j =>
-               s"MAX(CASE WHEN j = $j THEN w END) AS w$j").mkString(", ")}
-         |  FROM w${r - 1}),
+      s"""${pivotSql(s"wp${r - 1}", s"w${r - 1}")},
          |d$r AS MATERIALIZED (
-         |  SELECT zw.doc_id, ($dot) - y.y AS resid
+         |  SELECT zw.doc_id, $ScoreSql - y.y AS resid
          |  FROM zw CROSS JOIN wp${r - 1} wp JOIN y USING (doc_id)$tf),
          |g$r AS MATERIALIZED (
          |  SELECT zl.j, CAST(SUM(CAST(d.resid * zl.z AS DECIMAL(38,18)))
@@ -629,14 +622,10 @@ object QualityClassifier extends QueryModule {
     // same trained scores, the Mann-Whitney tallies with a plain
     // cumulative window (same exact values as the engine's two-phase)
     "q319_quality_auc" -> (chain(Rounds) + s""",
-       |wpf AS (
-       |  SELECT ${(0 until D).map(j =>
-            s"MAX(CASE WHEN j = $j THEN w END) AS w$j").mkString(", ")}
-       |  FROM w$Rounds),
+       |${pivotSql("wpf", s"w$Rounds")},
        |sc AS (
        |  SELECT y.y,
-       |    (${(0 until D).map(j => s"zs[${j + 1}] * wp.w$j")
-            .mkString(" + ")}) AS score
+       |    $ScoreSql AS score
        |  FROM zw CROSS JOIN wpf wp JOIN y USING (doc_id)),
        |v AS (
        |  SELECT score, COUNT(*) AS n,
@@ -665,14 +654,10 @@ object QualityClassifier extends QueryModule {
     // the split-filtered chain scored over ALL docs, tallied per side;
     // same decimal pair accumulators as q319
     "q320_quality_holdout" -> (chain(Rounds, split = true) + s""",
-       |wpf AS (
-       |  SELECT ${(0 until D).map(j =>
-            s"MAX(CASE WHEN j = $j THEN w END) AS w$j").mkString(", ")}
-       |  FROM w$Rounds),
+       |${pivotSql("wpf", s"w$Rounds")},
        |sc AS (
        |  SELECT spl.is_train, y.y,
-       |    (${(0 until D).map(j => s"zs[${j + 1}] * wp.w$j")
-            .mkString(" + ")}) AS score
+       |    $ScoreSql AS score
        |  FROM zw CROSS JOIN wpf wp JOIN y USING (doc_id)
        |  JOIN spl USING (doc_id)),
        |v AS (
@@ -709,14 +694,10 @@ object QualityClassifier extends QueryModule {
         .mkString("\nUNION ALL\n") +
       "\nORDER BY round, j"),
     "q312_quality_score" -> (chain(Rounds) + s""",
-       |wpf AS (
-       |  SELECT ${(0 until D).map(j =>
-            s"MAX(CASE WHEN j = $j THEN w END) AS w$j").mkString(", ")}
-       |  FROM w$Rounds),
+       |${pivotSql("wpf", s"w$Rounds")},
        |sc AS (
        |  SELECT y.source, y.y,
-       |    (${(0 until D).map(j => s"zs[${j + 1}] * wp.w$j")
-            .mkString(" + ")}) AS score
+       |    $ScoreSql AS score
        |  FROM zw CROSS JOIN wpf wp JOIN y USING (doc_id))
        |SELECT source, COUNT(*) AS n_docs,
        |  CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT)

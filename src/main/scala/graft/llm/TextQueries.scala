@@ -235,16 +235,24 @@ object TextQueries extends QueryModule {
     */
   val ZipfOctaves = 9
 
-  val zipfTokArray: org.apache.spark.sql.Column = expr(
-    s"""transform(
-      |  transform(sequence(0, size(split(text, ' ')) - 1),
-      |    j -> cast(conv(substring(md5(cast(concat(cast(doc_id as string),
-      |           ':', cast(j as string)) as binary)), 1, 8), 16, 10)
-      |         as bigint)),
-      |  m -> concat('w', cast(shiftleft(1L, cast(m % $ZipfOctaves as int))
-      |         + (m div $ZipfOctaves)
-      |           % shiftleft(1L, cast(m % $ZipfOctaves as int))
-      |       as string)))""".stripMargin)
+  val zipfTokArray: org.apache.spark.sql.Column = zipfDraws("doc_id")
+
+  /** The Zipf regeneration both token arrays share: one md5 draw per
+    * [[Tokens.words]] position j of `text`, keyed on `key` (SQL text over
+    * doc_id and j) and ':' j, mapped to its octave token. The lambdas
+    * stay SQL text so the plan names their variables j and m. */
+  private def zipfDraws(key: String): org.apache.spark.sql.Column = {
+    val positions = sequence(lit(0), size(Tokens.words(col("text"))) - 1)
+    val draws = call_function("transform", positions, expr(
+      s"""j -> cast(conv(substring(md5(cast(concat(cast($key as string),
+        |       ':', cast(j as string)) as binary)), 1, 8), 16, 10)
+        |     as bigint)""".stripMargin))
+    call_function("transform", draws, expr(
+      s"""m -> concat('w', cast(shiftleft(1L, cast(m % $ZipfOctaves as int))
+        |       + (m div $ZipfOctaves)
+        |         % shiftleft(1L, cast(m % $ZipfOctaves as int))
+        |     as string))""".stripMargin))
+  }
 
   /** The (source, t) exploded form of [[zipfTokArray]]. */
   def zipfTokens(docs: DataFrame): DataFrame =
@@ -268,19 +276,9 @@ object TextQueries extends QueryModule {
     * of the old domain's saturated wall. Integer-only arithmetic like
     * the base generator — both engines regenerate the identical corpus.
     */
-  val zipfFamilyTokArray: org.apache.spark.sql.Column = expr(
-    s"""transform(
-      |  transform(sequence(0, size(split(text, ' ')) - 1),
-      |    j -> cast(conv(substring(md5(cast(concat(cast(
-      |           CASE WHEN (j + doc_id) % 8 = 0 THEN doc_id
-      |                ELSE doc_id - 20 * ((doc_id div 20) % 3) END
-      |           as string),
-      |           ':', cast(j as string)) as binary)), 1, 8), 16, 10)
-      |         as bigint)),
-      |  m -> concat('w', cast(shiftleft(1L, cast(m % $ZipfOctaves as int))
-      |         + (m div $ZipfOctaves)
-      |           % shiftleft(1L, cast(m % $ZipfOctaves as int))
-      |       as string)))""".stripMargin)
+  val zipfFamilyTokArray: org.apache.spark.sql.Column = zipfDraws(
+    """CASE WHEN (j + doc_id) % 8 = 0 THEN doc_id
+      |     ELSE doc_id - 20 * ((doc_id div 20) % 3) END""".stripMargin)
 
   /** DuckDB restatement of [[zipfFamilyTokArray]], long format (source,
     * doc_id, j, t) — the shared CTE body of the q313–q315 oracles. Same

@@ -46,14 +46,12 @@ object GraphQueries extends QueryModule {
     // materialization. (The previous shape checkpointed a separate
     // degree frame and joined it back — each checkpoint re-ran the
     // whole edge build, doubling the dominant cost.) Serialized
-    // storage: the edge list is the one corpus-scale cache — one byte
-    // array per block instead of millions of row objects keeps it
-    // invisible to GC tracing while it lives across rounds.
+    // storage: the edge list is the one corpus-scale cache
+    // (Checkpoints.ckptSerialized).
     val wSrc = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
     val e = e0
       .select(col("src"), col("dst"), count(lit(1)).over(wSrc).as("outdeg"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.Checkpoints.ckptSerialized)
     // node set + count read the checkpoint, not the edge build; the
     // hash(src) partitioning survives the checkpoint, so the distinct
     // needs no exchange (one row per src survives in place, and the
@@ -357,14 +355,15 @@ object GraphQueries extends QueryModule {
         // e⋈state join+agg per reference — compounding across the four
         // half-steps (h2 sits inside a2 AND the final union). One
         // nodes-sized checkpoint per half-step bounds the re-evaluation
-        // at one execution per step. The L1 total collects to the
-        // driver (r15) — dsum18 already returns a double, so dividing
-        // by the literal is the identical IEEE operation, without the
-        // per-half-step broadcast-exchange machinery.
-        val r = raw.transform(graft.Checkpoints.ckpt)
-        val t = r.agg(Fns.dsum18(col("raw")).as("tot")).head()
+        // at one execution per step. The L1 total is observed on that
+        // checkpoint's own job (one action per half-step): dsum18 is
+        // order-independent, so it is the double a separate aggregate
+        // would collect, and dividing by the literal is the same IEEE op.
+        val obs = new org.apache.spark.sql.Observation()
+        val r = raw.observe(obs, Fns.dsum18(col("raw")).as("tot"))
+          .transform(graft.Checkpoints.ckpt)
         // no edges → no rows and a null total; any divisor keeps r empty
-        val tot = if (t.isNullAt(0)) 1.0 else t.getDouble(0)
+        val tot = Option(obs.get("tot")).fold(1.0)(_.asInstanceOf[Double])
         r.select(col("node"), (col("raw") / lit(tot)).as("score"))
       }
       def hubStep(auth: DataFrame): DataFrame = normalized(
@@ -472,8 +471,8 @@ object GraphQueries extends QueryModule {
   }
 
   def bfsHops(edges: DataFrame, maxHops: Int): DataFrame = {
-    val e = edges.repartition(col("src")).localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val e = edges.repartition(col("src"))
+      .transform(graft.Checkpoints.ckptSerialized)
     var known = e.agg(min(col("src")).as("node"))
       .select(col("node"), lit(0).as("dist"))
     var h = 1
@@ -516,8 +515,8 @@ object GraphQueries extends QueryModule {
     */
   def weightedSssp(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"weightedSssp needs at least one round, got $rounds")
-    val e = edges.repartition(col("src")).localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val e = edges.repartition(col("src"))
+      .transform(graft.Checkpoints.ckptSerialized)
     var d = e.agg(min(col("src")).as("node"))
       .select(col("node"), lit(0.0).as("dist"))
     var r = 0

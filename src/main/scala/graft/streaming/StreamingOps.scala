@@ -548,8 +548,8 @@ object StreamingOps {
     * it) — and the (doc_id, score) rows land via crash-atomic Snapshot
     * deltas (pk doc_id: a replayed batch re-lands the same rows,
     * absorbed by the latest-wins read). Completely stateless across
-    * batches; at 100 TB/day the model is 64 doubles folded into the
-    * plan as literals and each trigger costs one batch-local
+    * batches; at 100 TB/day the model is 64 doubles held in the
+    * plan as three array literals and each trigger costs one batch-local
     * featurize + score.
     */
   def qualityScoreSink(docs: DataFrame,

@@ -76,6 +76,13 @@ class CheckpointsSpec extends AnyFunSuite {
     Checkpoints.free(outside)
   }
 
+  test("no program code checkpoints outside Checkpoints") {
+    // a direct localCheckpoint escapes spark.graft.checkpoint.reliable
+    val sites = SourceGuard.sites(Seq("src/main/scala"), "localCheckpoint(",
+      exempt = "Checkpoints.scala")
+    assert(sites.isEmpty, s"checkpoint with Checkpoints.ckpt: $sites")
+  }
+
   test("reliable mode: ckpt matches the local path, roll works, free is a no-op") {
     val key = "spark.graft.checkpoint.reliable"
     def file(df: DataFrame) =
@@ -87,6 +94,12 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(file(local).isEmpty, "precondition: the default is block-backed")
     val localRows = local.collect().toSet
     Checkpoints.free(local)
+    // the edge-list variant keeps its local blocks serialized
+    val ser = Checkpoints.ckptSerialized(df)
+    val level = ser.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+      .getStorageLevel
+    assert(file(ser).isEmpty && !level.deserialized && level.useDisk, level)
+    Checkpoints.free(ser)
     val dir = Files.createTempDirectory("graft-ckpt-")
     spark.sparkContext.setCheckpointDir(dir.toString)
     val before = spark.conf.getOption(key)
@@ -96,6 +109,9 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(onDisk(ck),
         s"ckpt should write a reliable checkpoint under $dir, got ${file(ck)}")
       assert(ck.collect().toSet == localRows)
+      val serCk = Checkpoints.ckptSerialized(df)
+      assert(onDisk(serCk), s"ckptSerialized wrote ${file(serCk)}")
+      assert(serCk.collect().toSet == localRows)
 
       var r = Checkpoints.ckpt(Seq(1L).toDF("v"))
       (1 to 3).foreach { _ =>

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source scans for the drift guards (`GraftSessionSpec`,
-  * `ParquetSchemaSpec`, `llm.TokensSpec`, `etl.SnapshotSpec`): where a
-  * call appears in code. */
+  * `CheckpointsSpec`, `ParquetSchemaSpec`, `llm.TokensSpec`,
+  * `etl.SnapshotSpec`): where a call appears in code. */
 object SourceGuard {
 
   /** `file:line` of every line under `roots` that contains `call` and is

@@ -359,6 +359,7 @@ class SnapshotSpec extends AnyFunSuite {
         Snapshot.commitDelta(delta, root, "id")
       }
       assert(e.drifted.map(_._1) == Seq(column), e.getMessage)
+      assert(e.getMessage.contains(root), e.getMessage)
       assert(!fs.exists(new Path(root, "_v1_d2")))
       assert((pointerLine(), rows()) == before)
     }

@@ -1,6 +1,11 @@
 package graft.llm
 
-import graft.TestSpark
+import graft.{Checkpoints, Fns, Tables, TestSpark}
+import graft.functions.DotProduct
+import java.lang.Double.doubleToRawLongBits
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q311/q312 — the trained document-quality filter. The oracle proves
@@ -11,9 +16,60 @@ import org.scalatest.funsuite.AnyFunSuite
   * scorer genuinely recovers the rule gate (accuracy, not parroting —
   * the trainer never sees the thresholds, only the 21 features).
   */
-class QualityClassifierSpec extends AnyFunSuite {
+class QualityClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.01"
+
+  /** The trained (z, y) frame and weights on the small fixture, for the
+    * round-level cases. */
+  private var trainedOnce: Option[QualityClassifier.Trained] = None
+  private def trained = trainedOnce.getOrElse {
+    val t = QualityClassifier.trainFrame(
+      Tables.t(spark, TestSpark.Sf, "documents"), 3.0)
+    trainedOnce = Some(t)
+    t
+  }
+
+  override def afterAll(): Unit = trainedOnce.foreach(t => Checkpoints.free(t.z))
+
+  test("score(w) is bit-identical to the left-associated literal fold") {
+    val t = trained
+    def fold(w: Seq[Double]) = w.indices
+      .map(j => element_at(col("z"), j + 1) * lit(w(j))).reduce(_ + _)
+    val plan = t.z.select(QualityClassifier.score(t.w))
+      .queryExecution.optimizedPlan
+    assert(plan.expressions.exists(_.exists(_.isInstanceOf[DotProduct])), plan)
+    // round 1's all-zero weights, and the trained ones
+    Seq(t.w.map(_ => 0.0), t.w).foreach { w =>
+      val rows = t.z.select(QualityClassifier.score(w), fold(w)).collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(doubleToRawLongBits(r.getDouble(0)) ==
+          doubleToRawLongBits(r.getDouble(1)),
+          s"fused ${r.getDouble(0)} vs fold ${r.getDouble(1)}")
+      }
+    }
+  }
+
+  test("a GD round after the first compiles no class and runs one job") {
+    val t = trained
+    val w1 = t.w.map(_ * 0.5)
+    val w2 = t.w.map(_ * 0.25)
+    QualityClassifier.roundSums(t.z, w1)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var sums = Seq.empty[Double]
+    val jobs = TestSpark.jobsDuring { sums = QualityClassifier.roundSums(t.z, w2) }
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "a new weight vector compiled a class")
+    assert(jobs == 1, s"$jobs jobs for one round")
+    // the observed sums are the ones a collected aggregate gives
+    val r = QualityClassifier.score(w2) - col("y")
+    val aggs = t.w.indices.map(j => Fns.dsum18(r * element_at(col("z"), j + 1))) :+
+      Fns.dsum18(r * r)
+    val row = t.z.agg(aggs.head, aggs.tail: _*).head()
+    assert(sums.map(doubleToRawLongBits) ==
+      sums.indices.map(i => doubleToRawLongBits(row.getDouble(i))))
+  }
 
   test("q311: per-round MSE is strictly non-increasing (convergence guard)") {
     val traj = QualityClassifier.queries("q311_quality_train")(spark, sf)

@@ -11,8 +11,9 @@ class TokensSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  // Spark's split(<col>, " "); a Scala String's .split(" ") is not a column
-  private val SplitOnSpace = """(?<![.\w])split\(.*,\s*" "\s*\)""".r
+  // Spark's split(<col>, " "), or split(text, ' ') inside SQL text; a
+  // Scala String's .split(" ") is not a column
+  private val SplitOnSpace = """(?<![.\w])split\(.*,\s*(" "|' ')\s*\)""".r
   private val HashedSetSpelling = "array_sort(array_distinct(transform("
   private val StopwordLiteral = """"the", "a", "of", "and", "to""""
 
@@ -45,6 +46,17 @@ class TokensSpec extends AnyFunSuite {
     val row = Seq(" A<b>B</b>\t\tC \n").toDF("text")
       .select(Tokens.clean(col("text"))).head()
     assert(row.getString(0) == "a b c")
+  }
+
+  test("the tokenizer guard sees a split in Column code and in SQL text") {
+    val restated = Seq(
+      """val tok = split(col("text"), " ")""",
+      """  transform(sequence(0, size(split(text, ' ')) - 1),""")
+    restated.foreach(l => assert(SplitOnSpace.findFirstIn(l).isDefined, l))
+    val notTokenizers = Seq(
+      """s.split(",").map(_.trim)""", """name.split('/').last""",
+      """SELECT STRING_SPLIT(text, ' ') AS tok""")
+    notTokenizers.foreach(l => assert(SplitOnSpace.findFirstIn(l).isEmpty, l))
   }
 
   test("no text policy is restated outside Tokens") {

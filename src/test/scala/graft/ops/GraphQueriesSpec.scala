@@ -1,7 +1,12 @@
 package graft.ops
 
 import graft.TestSpark
+import org.apache.spark.TestListenerBridge
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit-level checks of the PageRank kernel on hand-computed graphs —
@@ -38,6 +43,38 @@ class GraphQueriesSpec extends AnyFunSuite {
     r.foreach(x => assert(math.abs(x - 0.25) < 1e-12))
   }
 
+  /** q246 planned on `dir`: how many actions planning ran, the L1
+    * totals they observed, and the result frame. */
+  private def hits(dir: String): (Int, Seq[Any], DataFrame) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Row]]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(qe.observedMetrics); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    TestListenerBridge.drainListeners(sc)
+    spark.listenerManager.register(l)
+    val out =
+      try {
+        val df = graft.SparkEntry.queries("q246_hits")(spark, dir)
+        TestListenerBridge.drainListeners(sc)
+        df
+      } finally spark.listenerManager.unregister(l)
+    val actions = seen.asScala.toSeq
+    (actions.size, actions.flatMap(_.values).map(_.getAs[Any]("tot")), out)
+  }
+
+  test("q246 takes each half-step's L1 total from its checkpoint job") {
+    val (nActions, totals, out) = hits(TestSpark.Sf)
+    // two edge checkpoints, then four half-step checkpoints each
+    // observing its total: no separate action for a total
+    assert(nActions == 6, s"$nActions actions")
+    assert(totals.size == 4 && totals.forall(_.isInstanceOf[Double]), totals)
+    assert(out.collect().nonEmpty)
+  }
+
   test("q246 HITS on an empty edge set returns no rows") {
     // orders/lineitem with the fixture's schema and no rows: the L1
     // totals are null, which must not reach the driver-side division
@@ -46,7 +83,8 @@ class GraphQueriesSpec extends AnyFunSuite {
       spark.read.parquet(s"${TestSpark.Sf}/$t.parquet").limit(0)
         .write.parquet(s"$dir/$t.parquet")
     }
-    val out = graft.SparkEntry.queries("q246_hits")(spark, dir)
+    val (_, totals, out) = hits(dir)
+    assert(totals.size == 4 && totals.forall(_ == null), totals)
     assert(out.collect().isEmpty)
     assert(out.columns.toSeq == Seq("kind", "node", "score"))
   }

@@ -610,9 +610,10 @@ class StreamingSpec extends AnyFunSuite {
       q.awaitTermination(60000)
       throw q.exception.get
     }
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-    assert(causes.exists(_.isInstanceOf[
-      graft.etl.UpsertKernel.SchemaDriftException]), e.toString)
+    val drift = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case d: graft.etl.UpsertKernel.SchemaDriftException => d }
+    assert(drift.isDefined, e.toString)
+    assert(drift.get.getMessage.contains(dest), drift.get.getMessage)
     assert(graft.etl.Snapshot.currentDeltaCount(spark, dest) == 0L)
     assert(rows() == before)
   }
