@@ -17,13 +17,18 @@ import org.apache.spark.sql.types.StructType
   * Layout: `root/_v<N>/` holds complete parquet base snapshots;
   * `root/_v<N>_d<M>/` holds incremental delta snapshots on top of base
   * `<N>` (see [[commitDelta]]); `root/_current` is a one-line pointer file
-  * naming the committed (base, delta-count) pair. Every directory is read
-  * through [[ParquetSchema]], which takes its schema from one parquet
-  * footer on the driver, so resolving a snapshot launches no Spark job
-  * (schema inference would cost one per directory, base and every
-  * stacked delta) and a commit records nothing beside its data.
-  * Directories committed by older code may still hold a `_schema.json`;
-  * its `_` prefix keeps it out of every read. Base commit order:
+  * naming the committed (base, delta-count) pair. A snapshot reads as
+  * two parquet relations whatever its delta depth: the base directory,
+  * and one relation over every stacked delta directory
+  * ([[ParquetSchema.readDirs]]), each row's precedence the `_d<M>` of the
+  * file it came from. Both take their schema from parquet footers on the
+  * driver, one per directory, so resolving a snapshot launches no Spark
+  * job (schema inference would cost one per directory) and a commit
+  * records nothing beside its data. The relations are built without
+  * `DataSource`'s path checks, so reading the `_`-prefixed directories
+  * logs no `All paths were ignored` warning. Directories committed by
+  * older code may still hold a `_schema.json`; its `_` prefix keeps it
+  * out of every read. Base commit order:
   *
   *   1. write the new snapshot into a fresh `_v<N+1>` directory — readers
   *      never look at it because the pointer still names `<N>`;
@@ -64,7 +69,9 @@ object Snapshot {
   private val PointerName = "_current"
 
   /** Deltas folded into a new base once a commitDelta would exceed this
-    * many stacked deltas (merge-on-read cost is linear in the stack). */
+    * many stacked deltas. A read's plan stays two relations at any depth,
+    * but its window shuffle carries every stacked row and its listing one
+    * directory per delta; compaction bounds both. */
   val CompactThreshold = 8
 
   /** Default retention depth: the new base plus its predecessor (the
@@ -229,27 +236,33 @@ object Snapshot {
     * 1..nDeltas folded in ([[mergedView]]). */
   private def resolve(spark: SparkSession, root: String, p: Pointer)
       : DataFrame = {
-    val base = readDir(spark, versionDir(root, p.base))
+    val base = readDirs(spark, Seq(versionDir(root, p.base)))
     if (p.nDeltas == 0L) base
-    else mergedView(base, (1L to p.nDeltas).map(d =>
-      readDir(spark, deltaDir(root, p.base, d))), p.pk)
+    else mergedView(base, readDirs(spark,
+      (1L to p.nDeltas).map(deltaDir(root, p.base, _))), p.pk)
   }
 
-  /** Read one base or delta directory, its schema from a footer. */
-  private def readDir(spark: SparkSession, dir: Path): DataFrame =
-    ParquetSchema.read(spark, dir.toString)
+  /** One relation over `dirs`, its schema from their footers. */
+  private def readDirs(spark: SparkSession, dirs: Seq[Path]): DataFrame =
+    ParquetSchema.readDirs(spark, dirs.map(_.toString))
 
   /** base ⊎ deltas with latest-wins-per-pk semantics: one union + one
     * window on pk — O(base + Σdeltas) with a single shuffle, not the
-    * O(nDeltas) chained anti-joins of iterated merge. `unionByName` with
-    * null-fill tolerates per-delta schema drift (added/dropped columns),
-    * matching [[UpsertKernel.merge]]'s documented policy. Rows within one
-    * source are assumed pk-unique ([[commitDelta]]'s contract). */
-  private def mergedView(base: DataFrame, deltas: Seq[DataFrame],
+    * O(nDeltas) chained anti-joins of iterated merge. `deltas` is the one
+    * relation over the base's delta directories; a delta row's precedence
+    * is the `_d<M>` of the last `_v<N>_d<M>` segment of its
+    * `_metadata.file_path`, a base row's 0.
+    * The deltas' footers merge under Spark's parquet rule and the base
+    * joins them by `unionByName` with null-fill, so added and dropped
+    * columns null-fill as in iterated [[UpsertKernel.merge]]. Rows within
+    * one source are assumed pk-unique ([[commitDelta]]'s contract). */
+  private def mergedView(base: DataFrame, deltas: DataFrame,
                          pk: String): DataFrame = {
-    val ranked = (base +: deltas).zipWithIndex
-      .map { case (df, i) => df.withColumn("__prec", lit(i)) }
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    val filePath = deltas.metadataColumn("_metadata").getField("file_path")
+    val prec = regexp_extract(filePath, ".*/_v\\d+_d(\\d+)/", 1).cast("int")
+    val ranked = base.withColumn("__prec", lit(0))
+      .unionByName(deltas.withColumn("__prec", prec),
+        allowMissingColumns = true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(pk)).orderBy(col("__prec").desc)
     ranked.withColumn("__rn", row_number().over(w))
@@ -323,7 +336,7 @@ object Snapshot {
       fs.listStatus(new Path(root))
         .filter(st => !st.getPath.getName.startsWith("_"))
         .foreach(st => fs.delete(st.getPath, true))
-    readDir(spark, versionDir(root, next))
+    readDirs(spark, Seq(versionDir(root, next)))
   }
 
   /** Commit `delta` incrementally: O(batch) write of a `_v<N>_d<M+1>`
@@ -342,7 +355,8 @@ object Snapshot {
     * merge). A root with no base yet takes the delta as base version 1.
     * The delta may add or drop columns (they null-fill at read) but not
     * re-type one: [[UpsertKernel.checkDrift]] compares it against the
-    * table as stored (base plus deltas, a footer each; the base's
+    * table as stored (the schema of [[read]]'s plan: one footer per
+    * directory and two file indexes at any depth, no job; the base's
     * hive-partition columns excluded, since their stored type is the one
     * path inference gives) and throws
     * [[UpsertKernel.SchemaDriftException]] naming `root` before anything

@@ -174,13 +174,14 @@ object DedupQueries extends QueryModule {
     * maxIter would redo the whole pair join per attempt). */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, maxIter: Int): (DataFrame, Int) = {
-    // edges hash-partitioned on dst, labels on id: localCheckpoint
-    // preserves outputPartitioning, so every round's edges-to-labels join
-    // is co-partitioned and the only shuffle per round is the groupBy(src)
-    // aggregation (whose output is again partitioned on the label key,
-    // feeding the next join shuffle-free). Symmetrization is an explode
-    // of both directions — ONE pass over the pair plan: a union of the
-    // pair frame with its own reversal evaluates the (expensive —
+    // edges hash-partitioned on dst before their checkpoint, labels on
+    // id. Under AQE the localCheckpoint records no output partitioning
+    // (`AdaptiveSparkPlanExec` exposes none; GraphQueries' object doc),
+    // so every round's edges-to-labels join re-exchanges the checkpointed
+    // edges on dst beside the groupBy(src) aggregation; the checkpoint
+    // still spares each round the pair plan. Symmetrization is an
+    // explode of both directions — ONE pass over the pair plan: a union
+    // of the pair frame with its own reversal evaluates the (expensive —
     // prefix-filtered inverted-index join in the q71 caller) pair plan
     // once per branch, and only the exchanges, not the final stages, get
     // reused between branches.

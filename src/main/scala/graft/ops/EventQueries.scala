@@ -1038,8 +1038,8 @@ object EventQueries extends QueryModule {
     // reports (a state whose stationary mass dwarfs its arrival share is
     // a sink; one that starves is an exit). Ten unrolled power-iteration
     // rounds from uniform — the q107 kernel shrunk to its essential
-    // shape: the state vector is #states rows, each round one
-    // co-partitioned join + one exact-decimal aggregation, and the
+    // shape: the state vector is #states rows, each round one join +
+    // one exact-decimal aggregation, and the
     // transition matrix materializes ONCE (localCheckpoint) because ten
     // rounds would otherwise re-run the corpus-sized LEAD pass each.
     "q179_markov_stationary" -> { (s, dir) =>

@@ -13,10 +13,16 @@ import org.apache.spark.sql.functions._
   * derived — Brin & Page 1998).
   *
   * Scale shape (the q71/q90 lessons applied): the edge list is computed
-  * once, repartitioned on its join key, and localCheckpointed so every
-  * iteration's join is co-partitioned and plan depth stays bounded at any
-  * iteration count; each iteration is exactly one join + one aggregation
+  * once, repartitioned on its join key, and localCheckpointed, so plan
+  * depth stays bounded at any iteration count and no round re-runs the
+  * edge build; each iteration is exactly one join + one aggregation
   * (rank state is (node, rank) pairs — nodes-sized, never edges-sized).
+  * The checkpoint does NOT keep the repartition's hash partitioning:
+  * under AQE (on in every `GraftSession`) `localCheckpoint` records
+  * `UnknownPartitioning(0)`, since `AdaptiveSparkPlanExec` exposes no
+  * final partitioning, so every round's join re-exchanges the
+  * checkpointed edge list on its key (an exchange over local blocks,
+  * not a re-run of the edge build).
   * Per-edge rank contributions sum through the scale-18 exact-decimal
   * [[Fns.dsum18]] (contributions sit at 1e-6..1e-9), so the rank vector
   * is bit-identical in both engines and the oracle can state the
@@ -32,12 +38,12 @@ object GraphQueries extends QueryModule {
     // The checkpointed edge list carries each source's out-degree folded
     // in ONCE (the degree aggregation rides the same src partitioning —
     // no extra exchange), so a propagation round never recomputes it.
-    // Rounds then cost exactly one shuffle each: the e-side of the join
-    // reads the checkpoint's src partitioning, the rank side arrives
-    // already partitioned on the node key from the previous round's
-    // aggregation, and only the groupBy(dst) moves data. Superseded rank
-    // frames and finally the edge list free via Checkpoints (bounded
-    // storage at any iteration count).
+    // Each round joins the edge list to the rank state on src and
+    // aggregates on dst; the checkpoint records no partitioning under
+    // AQE (see the object doc), so the join re-exchanges the edge list
+    // as well as the groupBy(dst) moving data. Superseded rank frames
+    // and finally the edge list free via Checkpoints (bounded storage at
+    // any iteration count).
     val e0 = edges.repartition(col("src"))
     // The out-degree folds in via a count window OVER THE SAME src
     // partitioning the repartition just established — no aggregation
@@ -52,10 +58,10 @@ object GraphQueries extends QueryModule {
     val e = e0
       .select(col("src"), col("dst"), count(lit(1)).over(wSrc).as("outdeg"))
       .transform(graft.Checkpoints.ckptSerialized)
-    // node set + count read the checkpoint, not the edge build; the
-    // hash(src) partitioning survives the checkpoint, so the distinct
-    // needs no exchange (one row per src survives in place, and the
-    // undirected edge list guarantees every node appears as a src)
+    // node set + count read the checkpoint, not the edge build (one row
+    // per src; the undirected edge list guarantees every node appears as
+    // a src); the distinct exchanges on src, since the checkpoint
+    // records no partitioning under AQE
     val nodes = e.select(col("src")).distinct()
     val nN = nodes.agg(count(lit(1)).as("n_nodes"))
     val r0 = nodes.select(col("src").as("node")).crossJoin(broadcast(nN))
@@ -92,7 +98,7 @@ object GraphQueries extends QueryModule {
     // co-transaction graph (suppliers offset by 1e6 into a shared id
     // space). The fixture stands in for the host/link graph of a crawl;
     // the plan is identical at web scale because rank state is
-    // nodes-sized and each iteration is one co-partitioned join.
+    // nodes-sized and each iteration is one join + one aggregation.
     "q107_pagerank" -> { (s, dir) =>
       val off = lit(1000000L)
       val e0 = Tables.t(s, dir, "orders")
@@ -159,7 +165,7 @@ object GraphQueries extends QueryModule {
     // quality signals) that completes the graph family alongside rank,
     // triangles, cores, and components. Frontier-delta iteration: each
     // round expands ONLY the nodes discovered last round against the
-    // once-checkpointed edge list (co-partitioned join), anti-joins the
+    // once-checkpointed edge list (one join), anti-joins the
     // known set to keep the state nodes-sized, and rolls the checkpoint
     // so storage stays bounded at any hop count. Four hops cover the
     // fixture's bipartite diameter; unreached nodes are absent (a
@@ -335,15 +341,14 @@ object GraphQueries extends QueryModule {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"), col("l_partkey").as("dst"))
         .distinct()
-      // TWO co-partitioned edge materializations (r15, guide §2.4):
-      // hub steps join on dst, auth steps on src — a single checkpoint
-      // carrying the distinct's (src, dst) partitioning forced a full
-      // edge exchange inside EVERY half-step. Partitioned on each join
-      // key (the localCheckpoint preserves output partitioning, the
-      // q292/q201 recipe), each half-step join is co-partitioned with
-      // the state frame's groupBy output and moves no edge bytes; the
-      // dst copy is one exchange over the src checkpoint, not a re-run
-      // of the join+distinct.
+      // TWO edge materializations, one per join key (r15, guide §2.4):
+      // hub steps join on dst, auth steps on src. They were meant to
+      // keep each half-step join co-partitioned with the state frame's
+      // groupBy output, but under AQE the localCheckpoint records no
+      // output partitioning (see the object doc), so every half-step
+      // still exchanges its edge copy on the join key. What the two
+      // checkpoints do buy: the dst copy is one exchange over the src
+      // checkpoint, not a re-run of the join+distinct.
       val eBySrc = e0.repartition(col("src"))
         .transform(graft.Checkpoints.ckpt)
       val eByDst = eBySrc.repartition(col("dst"))
@@ -501,7 +506,9 @@ object GraphQueries extends QueryModule {
     * the stored previous-round double, so the distance vector is
     * bit-identical to the oracle's unrolled CTEs at the same depth —
     * no decimal carry needed (contrast the SUM-shaped kernels). The
-    * edge list materializes once (repartitioned on the probe key);
+    * edge list materializes once (repartitioned on the probe key, a
+    * partitioning the checkpoint does not keep under AQE, so each
+    * round's join re-exchanges it on `src`; see the object doc);
     * each round rolls one checkpoint, the q107/q71 iterative shape —
     * and here the roll is not just lineage hygiene but the measured
     * winner: each round references the state frame TWICE (carry-over

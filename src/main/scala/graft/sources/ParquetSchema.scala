@@ -2,6 +2,7 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
+import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -11,8 +12,11 @@ import org.apache.parquet.hadoop.ParquetFileWriter.{
   PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.StructType
 
 /** Parquet reads that take the schema from one footer on the driver.
@@ -34,6 +38,8 @@ import org.apache.spark.sql.types.StructType
   * missing or glob path, a directory without a data file, an unreadable
   * footer, a session that merges schemas — the read is Spark's own, so
   * it raises Spark's error (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`).
+  * [[readDirs]] reads several directories as one relation, one such
+  * footer each, folded under Spark's own schema merge.
   */
 object ParquetSchema {
 
@@ -43,6 +49,69 @@ object ParquetSchema {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None         => spark.read.parquet(path)
     }
+
+  /** `spark.read.option("mergeSchema", "true").parquet(dirs: _*)` over
+    * directories that each hold one write, without the inference job.
+    * Each directory's schema is the one [[read]] takes; they fold in
+    * order under Spark's own parquet merge (`StructType.merge`, the rule
+    * `mergeSchema` folds footers with), so a column some directories lack
+    * null-fills in their rows and a column two directories type
+    * irreconcilably fails the read, naming it. Where a footer cannot
+    * decide for some directory, or the session merges schemas itself,
+    * the read is Spark's own merging read.
+    *
+    * The relation is the one that read resolves to — an
+    * `InMemoryFileIndex` over `dirs`, hive partitions discovered and
+    * typed below each — built directly rather than through `DataSource`,
+    * whose path checks cost a thread pool per read and log `All paths
+    * were ignored` for a list of `_`-prefixed directories.
+    */
+  def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    require(dirs.nonEmpty, "readDirs needs at least one directory")
+    val schemas = dirs.map(of(spark, _))
+    if (schemas.contains(None))
+      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    else {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val roots = dirs.map { d =>
+        val p = new Path(d)
+        p.getFileSystem(hadoopConf).makeQualified(p)
+      }
+      val schema = merged(spark, dirs.zip(schemas.flatten))
+      val index = new InMemoryFileIndex(spark, roots, Map.empty, Some(schema))
+      // DataSource's split: partition columns typed by the index, the
+      // data schema the rest, every column nullable
+      val parts = index.partitionSchema
+      val resolver = spark.sessionState.conf.resolver
+      val data = StructType(schema.filterNot(f =>
+        parts.exists(p => resolver(p.name, f.name))))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+        SchemaBridge.asNullable(data), None, new ParquetFileFormat,
+        Map.empty)(spark))
+    }
+  }
+
+  /** `schemas` folded in order under Spark's parquet merge; a column that
+    * no merge reconciles fails the fold, naming it and its directory. */
+  private def merged(spark: SparkSession, schemas: Seq[(String, StructType)])
+      : StructType = {
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    def merge(a: StructType, b: StructType) =
+      SchemaBridge.merge(a, b, caseSensitive)
+    schemas.tail.foldLeft(schemas.head._2) { case (acc, (dir, schema)) =>
+      try merge(acc, schema)
+      catch {
+        case NonFatal(e) =>
+          val clashes = schema.fields
+            .filter(f => Try(merge(acc, StructType(Seq(f)))).isFailure)
+            .map(f => s"${f.name} (${f.dataType.simpleString} in $dir)")
+          throw new IllegalArgumentException(
+            "cannot read the directories as one relation: column(s) " +
+              s"${clashes.mkString(", ")} re-typed against the directories " +
+              s"before it: ${e.getMessage}", e)
+      }
+    }
+  }
 
   /** The data schema (partition columns excluded) Spark would infer for
     * `path`, or None where only Spark's own inference can tell. */

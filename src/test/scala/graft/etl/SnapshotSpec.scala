@@ -6,6 +6,11 @@ import graft.{SourceGuard, TestSpark}
 import graft.TestSpark.jobsDuring
 import graft.sources.ParquetSchema
 import org.apache.hadoop.fs.Path
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,6 +45,39 @@ class SnapshotSpec extends AnyFunSuite {
   private def writeFile(path: String, text: String): Unit = {
     val out = fs.create(new Path(path), true)
     try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Rows as a set of plain values, for order-free comparison. */
+  private def rowSet(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  /** Spark's "All paths were ignored" warnings logged while `body` runs. */
+  private def ignoredPathWarnings(body: => Unit): Int = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("ignored-paths", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage
+              .startsWith("All paths were ignored")) {
+          seen.incrementAndGet(); ()
+        }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    seen.get
+  }
+
+  /** Rewrite `root`'s pointer to name `nDeltas` stacked deltas. */
+  private def setDeltaCount(root: String, nDeltas: Long): Unit = {
+    val in = fs.open(new Path(root, "_current"))
+    val line = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    val p = Snapshot.parsePointer(line)
+    writeFile(s"$root/_current", p.copy(nDeltas = nDeltas).line)
   }
 
   test("commit round-trips and bumps the version") {
@@ -533,5 +571,139 @@ class SnapshotSpec extends AnyFunSuite {
     assert(writes >= 1)
     assert(jobsDuring { Snapshot.commitDelta(delta, root, "id") } == writes)
     assert(Snapshot.read(spark, root).count() == 11)
+  }
+
+  test("a read plans base and deltas as two file relations at any depth") {
+    import spark.implicits._
+    Seq(1, 3, 7).foreach { n =>
+      val root = freshRoot()
+      Snapshot.commit(df(10), root)
+      (1 to n).foreach { i =>
+        Snapshot.commitDelta(
+          Seq((i.toLong, s"d$i")).toDF("id", "payload"), root, "id")
+      }
+      var got: DataFrame = null
+      assert(jobsDuring { got = Snapshot.read(spark, root) } == 0, n)
+      val relations = got.queryExecution.analyzed.collect {
+        case r: LogicalRelation => r
+      }
+      assert(relations.size == 2, s"$n deltas: ${relations.size} relations")
+      assert(rowSet(got) == (1 to 10).map(i =>
+        Seq(i.toLong, if (i <= n) s"d$i" else s"row$i")).toSet, n)
+    }
+  }
+
+  test("the newest delta wins per key across the stack") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(4), root)
+    Seq(Seq((1L, "d1"), (3L, "d1")), Seq((5L, "d2")),
+        Seq((1L, "d3"), (2L, "d3"))).foreach { rows =>
+      Snapshot.commitDelta(rows.toDF("id", "payload"), root, "id")
+    }
+    val got = Snapshot.read(spark, root).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got == Seq((1L, "d3"), (2L, "d3"), (3L, "d1"), (4L, "row4"),
+      (5L, "d2")))
+  }
+
+  test("columns added then dropped across deltas null-fill as iterated " +
+       "UpsertKernel.merge does") {
+    import spark.implicits._
+    val root = freshRoot()
+    val base = df(3)
+    val deltas = Seq(
+      Seq((2L, "b1", 7L)).toDF("id", "payload", "extra"),
+      Seq((3L, "c2"), (4L, "n2")).toDF("id", "payload"),
+      Seq((1L, 0.5), (2L, 1.5)).toDF("id", "w"))
+    Snapshot.commit(base, root)
+    deltas.foreach(Snapshot.commitDelta(_, root, "id"))
+    val want = deltas.foldLeft(base)(UpsertKernel.merge(_, _, "id"))
+    val got = Snapshot.read(spark, root)
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)))
+    assert(got.schema.fieldNames.toSeq == Seq("id", "payload", "extra", "w"))
+    assert(rowSet(got) == rowSet(want))
+  }
+
+  test("readVersion of a past base returns the rows it read as current") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(5), root)
+    Snapshot.commitDelta(Seq((2L, "b", 1L)).toDF("id", "payload", "x"),
+      root, "id")
+    Snapshot.commitDelta(Seq((6L, "f")).toDF("id", "payload"), root, "id")
+    Snapshot.commitDelta(Seq((2L, "b3", 3L)).toDF("id", "payload", "x"),
+      root, "id")
+    val current = Snapshot.read(spark, root)
+    val (schema, rows) = (current.schema, rowSet(current))
+    Snapshot.commit(df(2), root)
+    val past = Snapshot.readVersion(spark, root, 1L)
+    assert(past.schema == schema)
+    assert(rowSet(past) == rows)
+    assert(rows.contains(Seq(2L, "b3", 3L)))
+  }
+
+  test("a merging session and a data-less delta read as Spark's own " +
+       "read does") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(4), root)
+    Snapshot.commitDelta(Seq((1L, "d1", 1L)).toDF("id", "payload", "x"),
+      root, "id")
+    Snapshot.commitDelta(Seq((2L, "d2")).toDF("id", "payload"), root, "id")
+    Snapshot.commitDelta(Seq((3L, "d3")).toDF("id", "payload"), root, "id")
+    val plain = Snapshot.read(spark, root)
+    val (schema, rows) = (plain.schema, rowSet(plain))
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try {
+      val merging = Snapshot.read(spark, root)
+      assert(merging.schema == schema)
+      assert(rowSet(merging) == rows)
+    } finally spark.conf.unset(key)
+    // _d2 keeps only its _SUCCESS marker: it contributes no rows, as in
+    // Spark's merging read of the three delta directories
+    fs.listStatus(new Path(root, "_v1_d2")).map(_.getPath)
+      .filterNot(_.getName == "_SUCCESS").foreach(fs.delete(_, false))
+    val deltaDirs = (1 to 3).map(d => s"$root/_v1_d$d")
+    assert(spark.read.option("mergeSchema", "true").parquet(deltaDirs: _*)
+      .count() == 2)
+    val got = Snapshot.read(spark, root)
+    assert(got.schema == schema)
+    assert(rowSet(got) == rows - Seq(2L, "d2", null) + Seq(2L, "row2", null))
+  }
+
+  test("a legacy stack whose deltas re-type a column fails naming it") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(Seq((1L, 10)).toDF("id", "v"), root)
+    Snapshot.commitDelta(Seq((2L, 20)).toDF("id", "v"), root, "id")
+    // written before commitDelta checked drift: _d2 stores v as a string
+    Seq((3L, "thirty")).toDF("id", "v").write.parquet(s"$root/_v1_d2")
+    setDeltaCount(root, 2L)
+    val e = intercept[IllegalArgumentException](Snapshot.read(spark, root))
+    assert(e.getMessage.contains("v (string in"), e.getMessage)
+    assert(e.getMessage.contains("_v1_d2"), e.getMessage)
+  }
+
+  test("reading base + deltas logs no All-paths-ignored warning") {
+    import spark.implicits._
+    val root = freshRoot()
+    Snapshot.commit(df(4), root)
+    (1 to 3).foreach { i =>
+      Snapshot.commitDelta(
+        Seq((i.toLong, s"d$i")).toDF("id", "payload"), root, "id")
+    }
+    // the appender hears Spark's warning for a hidden directory
+    assert(ignoredPathWarnings(spark.read.parquet(s"$root/_v1")) >= 1)
+    assert(ignoredPathWarnings {
+      assert(Snapshot.read(spark, root).count() == 4)
+      assert(Snapshot.readVersion(spark, root, 1L).count() == 4)
+      Snapshot.commitDelta(Seq((9L, "n")).toDF("id", "payload"), root, "id")
+    } == 0)
+    // a legacy reader of the root still sees no snapshot's files
+    assert(fs.listStatus(new Path(root))
+      .forall(_.getPath.getName.startsWith("_")))
   }
 }

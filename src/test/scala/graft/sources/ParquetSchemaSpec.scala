@@ -134,9 +134,78 @@ class ParquetSchemaSpec extends AnyFunSuite {
     assert(jobsDuring { ParquetSchema.read(spark, dir) } == 0)
   }
 
+  test("readDirs reads several directories as Spark's merging read does") {
+    import spark.implicits._
+    val root = freshDir()
+    val dirs = Seq(
+      write(Seq((1L, "a")).toDF("id", "payload"), s"$root/_d1"),
+      write(Seq((2L, "b", 7L)).toDF("id", "payload", "extra"), s"$root/_d2"),
+      write(Seq((3L, 1.5)).toDF("id", "w"), s"$root/_d3"))
+    val merging = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    var got: DataFrame = null
+    assert(jobsDuring { got = ParquetSchema.readDirs(spark, dirs) } == 0)
+    assert(got.schema == merging.schema)
+    assert(got.schema.fieldNames.toSeq == Seq("id", "payload", "extra", "w"))
+    assert(got.collect().toSet == merging.collect().toSet)
+    assert(got.inputFiles.toSet == merging.inputFiles.toSet)
+    // one directory: the schema and rows of read, partitions included
+    val parts = freshDir()
+    Seq((1L, "10", "a"), (2L, "20", "b")).toDF("id", "bucket", "payload")
+      .write.partitionBy("bucket").parquet(s"$parts/_v1")
+    val one = ParquetSchema.readDirs(spark, Seq(s"$parts/_v1"))
+    assert(one.schema == inferred(s"$parts/_v1"))
+    assert(one.collect().toSet == spark.read.parquet(s"$parts/_v1")
+      .collect().toSet)
+  }
+
+  test("readDirs falls back to Spark's read where a footer cannot decide") {
+    import spark.implicits._
+    val root = freshDir()
+    val full = write(Seq((1L, "a")).toDF("id", "payload"), s"$root/_d1")
+    val empty = s"$root/_d2"
+    fs.mkdirs(new Path(empty))
+    fs.create(new Path(empty, "_SUCCESS")).close()
+    val both = Seq(full, empty)
+    val merging = spark.read.option("mergeSchema", "true").parquet(both: _*)
+    val got = ParquetSchema.readDirs(spark, both)
+    assert(got.schema == merging.schema)
+    assert(got.collect().toSet == merging.collect().toSet)
+    val missing = freshDir()
+    assert(intercept[AnalysisException](
+      ParquetSchema.readDirs(spark, Seq(full, missing))).getCondition ==
+      "PATH_NOT_FOUND")
+  }
+
+  test("readDirs names a column two directories type differently") {
+    import spark.implicits._
+    val root = freshDir()
+    val dirs = Seq(
+      write(Seq((1L, 10)).toDF("id", "v"), s"$root/_d1"),
+      write(Seq((2L, "x")).toDF("id", "v"), s"$root/_d2"))
+    val e = intercept[IllegalArgumentException] {
+      ParquetSchema.readDirs(spark, dirs)
+    }
+    assert(e.getMessage.contains("v (string in"), e.getMessage)
+    assert(e.getMessage.contains("_d2"), e.getMessage)
+  }
+
+  test("the read-chain scan sees builder chains across lines") {
+    def lines(code: String) =
+      SourceGuard.readLines(code.split("\n").toSeq, "parquet")
+    assert(lines("val d = spark.read.parquet(p)") == Seq(1))
+    assert(lines("x\nspark.read.schema(StructType(Seq(f)))\n" +
+      "  .option(\"a\", g(1))\n  .parquet(dirs: _*)") == Seq(2))
+    assert(lines("df.write.mode(\"overwrite\").parquet(p)").isEmpty)
+    assert(lines("spark.readStream.schema(s).parquet(p)").isEmpty)
+    assert(lines("Snapshot.read(spark, root).write.parquet(p)").isEmpty)
+    assert(lines("spark.read.csv(p).write.parquet(q)").isEmpty)
+    assert(lines("// spark.read.parquet(p)\n * spark.read.parquet(p)")
+      .isEmpty)
+  }
+
   test("no parquet read outside ParquetSchema starts an inference job") {
-    val sites = SourceGuard.sites(Seq("src/main/scala"), ".read.parquet(",
+    val sites = SourceGuard.readSites(Seq("src/main/scala"), "parquet",
       exempt = "ParquetSchema.scala")
-    assert(sites.isEmpty, s"read parquet with ParquetSchema.read: $sites")
+    assert(sites.isEmpty, s"read parquet with ParquetSchema: $sites")
   }
 }
